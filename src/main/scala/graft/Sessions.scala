@@ -4,18 +4,20 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory shared by Verify/Bench/tests.
   *
-  * local-mode defaults sized for the harness (local[32], 128 GiB JVM):
+  * local-mode defaults sized from the machine (one task slot per core):
   * shuffle partitions match core count, AQE on so skewed/small shuffles
   * re-plan at runtime — the same settings that scale to a real cluster,
   * where `spark.sql.shuffle.partitions` would be set to ~2-3x total cores
   * and AQE coalesces the rest.
   */
 object Sessions {
-  /** Parsed once: the same value feeds both local[N] and
+  /** The core count: `SPARK_GRAFT_CPUS` when set, else the JVM's available
+    * processors. The same value feeds both local[N] and
     * spark.sql.shuffle.partitions, so a master-only value like '*' must
     * fail HERE with a clear message, not at the first shuffle. */
   def cpus: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     require(raw.nonEmpty && raw.forall(_.isDigit) && raw.toInt > 0,
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'")
     raw.toInt

@@ -82,14 +82,27 @@ object Fetch {
     }
   }
 
-  /** Requests for one table over the in-scope games (or combos). */
+  /** In a `--delta` run, the keys not yet published in `<output>/<table>`
+    * (the same anti-join IngestMain applies to the landed rows), so a
+    * delta fetches only unseen games or combos, as the reference's delta
+    * mode filters before it fetches. */
+  private def unseen(keys: DataFrame, table: String, args: PipelineArgs.Args)(
+      implicit spark: SparkSession): DataFrame = {
+    val outDir = s"${args.output}/$table"
+    if (args.delta) Warehouse.recover(spark, outDir)
+    Publish.deltaOnly(keys, args.delta, outDir, keys.columns.toSeq)
+  }
+
+  /** Requests for one table over the in-scope games (or combos); in a
+    * `--delta` run only over those not yet published. */
   def requestsFor(table: String, args: PipelineArgs.Args,
       transport: Fetcher.Transport)(
       implicit spark: SparkSession): Dataset[Endpoints.Request] = {
     import spark.implicits._
+    def games = unseen(gameIds(transport, args).toDF("GAME_ID"), table, args).as[String]
     table match {
-      case "play_by_play" => gameIds(transport, args).map(Endpoints.playByPlay(_))
-      case "rotations" => gameIds(transport, args).map(Endpoints.gameRotation(_))
+      case "play_by_play" => games.map(Endpoints.playByPlay(_))
+      case "rotations" => games.map(Endpoints.gameRotation(_))
       case "team_game_log" =>
         // season-granular endpoint: one request covers the whole scope
         // (game-id mode still fetches the season and lets Publish.scope cut)
@@ -102,8 +115,9 @@ object Fetch {
         // them (Warehouse.recover's own invariant)
         Warehouse.recover(spark, s"${args.output}/rotations")
         val rot = spark.read.parquet(s"${args.output}/rotations")
-        rot.filter(col("SEASON") === season && col("SEASON_TYPE") === seasonType)
-          .select(col("PLAYER_ID"), col("TEAM_ID")).distinct()
+        val combos = rot.filter(col("SEASON") === season && col("SEASON_TYPE") === seasonType)
+          .select(col("PLAYER_ID"), col("TEAM_ID"), col("SEASON"), col("SEASON_TYPE")).distinct()
+        unseen(combos, table, args).select(col("PLAYER_ID"), col("TEAM_ID"))
           .as[(Long, Long)]
           .map { case (p, t) =>
             Endpoints.shotChartDetail(p, t, season = season, seasonType = seasonType)
@@ -148,21 +162,24 @@ object Fetch {
     // exactly when they matter most
     landErrors(fetched, s"${args.input}/${table}_fetch_errors")
     val parsed = RestDecoder.parse(fetched.flatMap(_.body))
-    val raw = table match {
-      case "play_by_play" =>
-        RestDecoder.cast(RestDecoder.resultSet(parsed, PlayByPlaySet), playByPlayRaw)
-      case "rotations" =>
-        RotationSets.map(s => RestDecoder.cast(
-          RestDecoder.resultSet(parsed, s), rotationsRaw))
-          .reduce(_.unionByName(_))
-      case "team_game_log" =>
-        RestDecoder.cast(RestDecoder.resultSet(parsed, LeagueGameLogSet), teamGameLogRaw)
-      case "shot_details" =>
-        val (season, seasonType) = seasonScope(args)
-        RestDecoder.cast(RestDecoder.resultSet(parsed, ShotChartSet), shotDetailsRaw)
-          .withColumn("SEASON", lit(season))
-          .withColumn("SEASON_TYPE", lit(seasonType))
+    val (sets, shape) = table match {
+      case "play_by_play" => (Seq(PlayByPlaySet), playByPlayRaw)
+      case "rotations" => (RotationSets, rotationsRaw)
+      case "team_game_log" => (Seq(LeagueGameLogSet), teamGameLogRaw)
+      case "shot_details" => (Seq(ShotChartSet), shotDetailsRaw)
     }
+    // a delta run with nothing new fans out zero requests — land the empty
+    // table instead of dying on the header probe
+    val decoded =
+      if (fetched.isEmpty) emptyOf(shape)
+      else sets.map(s => RestDecoder.cast(RestDecoder.resultSet(parsed, s), shape))
+        .reduce(_.unionByName(_))
+    val raw =
+      if (table != "shot_details") decoded
+      else {
+        val (season, seasonType) = seasonScope(args)
+        decoded.withColumn("SEASON", lit(season)).withColumn("SEASON_TYPE", lit(seasonType))
+      }
     Warehouse.replaceDir(raw, s"${args.input}/${table}_raw")
     spark.read.parquet(s"${args.input}/${table}_raw")
     } finally {
@@ -205,9 +222,7 @@ object Fetch {
       // a delta run with nothing new fans out zero requests — land the
       // empty table instead of dying on the header probe
       val raw =
-        if (tagged.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], boxRaw)
+        if (tagged.isEmpty) emptyOf(boxRaw)
         else
           RestDecoder.resultSet(
               RestDecoder.parseTagged(tagged), BoxPlayerSet, keep = Seq("params"))
@@ -238,6 +253,9 @@ object Fetch {
       ()
     }
   }
+
+  private def emptyOf(shape: StructType)(implicit spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], shape)
 
   private def landErrors(fetched: org.apache.spark.sql.Dataset[FetchAll.Fetched],
       dir: String)(implicit spark: SparkSession): Unit = {

@@ -119,7 +119,7 @@ object AsOfJoin {
     * currentRow] frames incrementally (add-only) while a
     * [currentRow, unboundedFollowing] frame is RE-AGGREGATED from the
     * moving lower bound at every row — O(rows²) on a hot key (measured:
-    * tools/ProfSkew, SCALING.md skew note). */
+    * SCALING.md skew note). */
   private def fwdExpr(keyCols: Seq[String]): Column =
     last(col("__p"), ignoreNulls = true).over(Window
       .partitionBy(keyCols.map(col): _*)

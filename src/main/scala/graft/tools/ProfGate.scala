@@ -31,6 +31,13 @@ import graft.queries.DedupOps
   * range relative to one batch).
   */
 object ProfGate {
+  private def time[A](label: String)(f: => A): A = {
+    val t0 = System.nanoTime()
+    val r = f
+    println(f"[prof] $label%-44s ${(System.nanoTime() - t0) / 1e9}%.3f s")
+    r
+  }
+
   def main(args: Array[String]): Unit = {
     val batches = args.headOption.map(_.toInt).getOrElse(40)
     val batchSize = args.drop(1).headOption.map(_.toInt).getOrElse(250)
@@ -51,7 +58,7 @@ object ProfGate {
       (col("doc_id") + lit(100000L * (k + 1))).as("doc_id"),
       regexp_replace(col("text"), "(\\S+)", s"$$1·$k").as("text"))
 
-    Prof.time("gate startup (build from corpus)")(())
+    time("gate startup (build from corpus)")(())
     val state = GateState.build(corpus)
     println(s"[prof-gate] corpus=$corpusCount docs, $batches batches x $batchSize docs")
     println("[prof-gate] batch\twall_s\tabsorbed_shingle_rows\tabsorbed_index_rows")
@@ -73,7 +80,7 @@ object ProfGate {
     // restart path A: no tables — resume re-reads and re-shingles every
     // published batch dir (the pre-compaction cost an operator pays after
     // months of uptime)
-    val stA = Prof.time(s"resume WITHOUT tables ($batches batches of history)")(
+    val stA = time(s"resume WITHOUT tables ($batches batches of history)")(
       GateState.resume(spark, corpus, out))
     println(s"[prof-gate] resume-no-tables absorbed: ${stA.absorbedStats()}")
     stA.close()
@@ -83,9 +90,9 @@ object ProfGate {
     val corpusSh = DedupOps.shingledOf(corpus)
     DedupOps.writeCorpusBandIndex(corpusSh, "prof_gate_idx")
     DedupOps.writeCorpusShingles(corpusSh, "prof_gate_sh")
-    Prof.time(s"compactState ($batches-batch tail)")(
+    time(s"compactState ($batches-batch tail)")(
       GateState.compactState(spark, out, "prof_gate_idx", "prof_gate_sh"))
-    val stB = Prof.time("resume WITH tables + manifest (tail = 0)")(
+    val stB = time("resume WITH tables + manifest (tail = 0)")(
       GateState.resume(spark, corpus, out,
         baseIndex = Some(spark.table("prof_gate_idx")),
         baseShingles = Some(spark.table("prof_gate_sh"))))

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd, SparkListenerStageCompleted}
-import graft.{Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 
 /** Per-stage wall/CPU attribution for one named query: warms the plan at
   * sf0.001 (Bench's discipline), runs the query once cache-cleared at the
@@ -17,18 +17,10 @@ object ProfStages {
     val repeat = if (args.length > 2) args(2).toInt else 1
     require(SparkEntry.queries.contains(name), s"unknown query: $name")
     val spark = Sessions.local("graft-profstages")
-    val warmDir = {
-      val sib = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (sib.isDirectory) sib.getPath else sfDir
-    }
-    def noop(dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    noop(warmDir)
+    val query = SparkEntry.queries(name)
+    Bench.runNoop(spark, query, Bench.warmDir(sfDir))
     // warm at scale once too, so JIT is hot and listener sees steady state
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    noop(sfDir)
+    Bench.timedRun(spark, query, sfDir)
 
     case class St(job: Int, stage: Int, nTasks: Int, wallMs: Long,
       taskMs: Long, shufWriteB: Long, shufReadB: Long, nm: String)
@@ -59,11 +51,7 @@ object ProfStages {
     }
     spark.sparkContext.addSparkListener(listener)
     (1 to repeat).foreach { _ =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val t0 = System.nanoTime()
-      noop(sfDir)
-      val t = (System.nanoTime() - t0) / 1e9
+      val t = Bench.timedRun(spark, query, sfDir)
       println(f"[profstages] $name total ${t}%.3f s")
     }
     spark.sparkContext.removeSparkListener(listener)

@@ -1,12 +1,11 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 
 /** Single-query timing harness: `runMain graft.tools.TimeQuery <sfDir>
-  * <query>...` warms each named query at the sf0.001 sibling (same codegen
-  * classes, ~1% of the data — the same discipline as Bench's warmup), then
-  * reports best-of-2 timings under Bench's cache-cleared protocol. For
-  * measuring a NEW query's envelope band without paying the full suite.
+  * <query>...` warms each named query at the sf0.001 sibling, then reports
+  * best-of-2 timings under Bench's cache-cleared protocol, without paying
+  * for the full suite.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -18,32 +17,13 @@ object TimeQuery {
       case bad => sys.error(s"unknown queries: $bad")
     }
     val spark = Sessions.local("graft-timequery")
-    // same warm-dir rule as Bench: env override, else sf0.001 sibling,
-    // else warm on the timed dir itself and say so loudly
-    val warmDir = sys.env.get("SPARK_GRAFT_WARM_DIR").getOrElse {
-      val sib = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (sib.isDirectory) sib.getPath
-      else {
-        System.err.println(
-          s"[timequery] WARN: no sf0.001 sibling of $sfDir; warming on the timed dir itself")
-        sfDir
-      }
-    }
-    def noop(name: String, dir: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+    val warm = Bench.warmDir(sfDir)
     // a warmup failure must not kill the measurement run (Bench's rule)
-    names.foreach(n => try noop(n, warmDir) catch { case e: Throwable =>
+    names.foreach(n => try Bench.runNoop(spark, SparkEntry.queries(n), warm) catch { case e: Throwable =>
       System.err.println(s"[timequery] warmup $n failed (ignored): ${e.getMessage}")
     })
     names.foreach { name =>
-      val ts = (1 to 2).map { _ =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        val t0 = System.nanoTime()
-        noop(name, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      }
+      val ts = (1 to 2).map(_ => Bench.timedRun(spark, SparkEntry.queries(name), sfDir))
       println(f"[timequery] $name%-28s best=${ts.min}%.3f s  runs=${ts.map(t => f"$t%.3f").mkString(",")}")
     }
     spark.stop()

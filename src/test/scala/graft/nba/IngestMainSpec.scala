@@ -1,6 +1,7 @@
 package graft.nba
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -131,9 +132,75 @@ class IngestMainSpec extends SparkSpec {
     assert(out2.select("id").as[String].collect().toSet ==
       Set(s"7-$G-10", s"7-$G-11", s"8-$G-12"))
   }
+
+  test("a delta run fetches only games not yet published; a delta with nothing new fetches none") {
+    import IngestMainSpec.CountingApi
+    val root = Files.createTempDirectory("graft_ing").toString
+    val tables = Seq("play_by_play", "rotations")
+    val (g1, g2, g3) = ("0022400011", "0022400012", "0022400013")
+    def run(delta: Boolean): Map[String, Int] = {
+      CountingApi.requests.clear()
+      tables.foreach(t => IngestMain.runWith(spark, args(s"$root/in", s"$root/out", t, delta),
+        Some(CountingApi)))
+      CountingApi.requests.asScala.map { case (k, v) => k -> v.get }.toMap
+    }
+    def published(t: String) = spark.read.parquet(s"$root/out/$t")
+    CountingApi.shown = Seq(g1, g2)
+    run(delta = false)
+    CountingApi.shown = Seq(g1, g2, g3)
+    val first = run(delta = true)
+    assert(first.getOrElse("playbyplayv2", 0) == 1)
+    assert(first.getOrElse("gamerotation", 0) == 1)
+    tables.foreach(t => assert(published(t).select("GAME_ID").distinct()
+      .as[String].collect().toSet == Set(g1, g2, g3)))
+    val counts = tables.map(t => published(t).count())
+    val second = run(delta = true)
+    assert(second.getOrElse("playbyplayv2", 0) == 0)
+    assert(second.getOrElse("gamerotation", 0) == 0)
+    assert(tables.map(t => published(t).count()) == counts)
+    assert(spark.read.parquet(s"$root/in/play_by_play_raw").isEmpty)
+  }
 }
 
 object IngestMainSpec {
+
+  /** A stats API whose game log shows `shown` and which counts the requests
+    * it serves per endpoint (one JVM in local mode, so the fan-out tasks
+    * count into the same map). */
+  object CountingApi extends graft.sources.Fetcher.Transport {
+    @volatile var shown: Seq[String] = Nil
+    val requests = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
+    private def rs(name: String, headers: Seq[String], rows: Seq[Seq[String]]): String = {
+      val h = headers.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val r = rows.map(_.map("\"" + _ + "\"").mkString("[", ",", "]")).mkString("[", ",", "]")
+      s"""{"resultSets":[{"name":"$name","headers":$h,"rowSet":$r}]}"""
+    }
+    def get(r: graft.sources.Endpoints.Request): String = {
+      requests.computeIfAbsent(r.path, _ => new java.util.concurrent.atomic.AtomicInteger())
+        .incrementAndGet()
+      r.path match {
+        case "leaguegamelog" =>
+          rs("LeagueGameLog", Seq("GAME_ID", "TEAM_ID", "MATCHUP"),
+            shown.flatMap(g => Seq(Seq(g, "100", "AWY @ HOM"), Seq(g, "200", "HOM vs. AWY"))))
+        case "playbyplayv2" =>
+          val g = r.param("gameId").get
+          val hdr = Fetch.playByPlayRaw.fieldNames.toSeq
+          def event(n: Int) = hdr.map {
+            case "GAME_ID" => g
+            case "EVENTNUM" => n.toString
+            case "PCTIMESTRING" => "12:00"
+            case h if h.endsWith("DESCRIPTION") => "d"
+            case _ => "1"
+          }
+          rs("PlayByPlay", hdr, Seq(event(1), event(2)))
+        case "gamerotation" =>
+          val g = r.param("GameID").get
+          FakeStatsApi.get(r).replace("0022400001", g).replace("0022400002", g)
+        case other => throw new RuntimeException(s"unexpected endpoint $other")
+      }
+    }
+  }
 
   /** A deterministic stats API: two games, away team 100 (player 201 with
     * two stints, player 202), home team 200 (player 101). Lives in the
