@@ -93,6 +93,13 @@ object Fetch {
     Publish.deltaOnly(keys, args.delta, outDir, keys.columns.toSeq)
   }
 
+  /** Whether a `--delta` landing of `table` holds only unpublished keys:
+    * [[requestsFor]] drops the published games (or combos) before it
+    * fetches, and a response carries only the keys it was asked for. The
+    * season-granular team_game_log request cannot be narrowed that way, so
+    * its landed rows still need the delta anti-join. */
+  def landsUnseenOnly(table: String): Boolean = table != "team_game_log"
+
   /** Requests for one table over the in-scope games (or combos); in a
     * `--delta` run only over those not yet published. */
   def requestsFor(table: String, args: PipelineArgs.Args,
@@ -114,7 +121,7 @@ object Fetch {
         // partitions in the .old sibling — the combo enumeration must see
         // them (Warehouse.recover's own invariant)
         Warehouse.recover(spark, s"${args.output}/rotations")
-        val rot = spark.read.parquet(s"${args.output}/rotations")
+        val rot = Warehouse.readTable(spark, s"${args.output}/rotations")
         val combos = rot.filter(col("SEASON") === season && col("SEASON_TYPE") === seasonType)
           .select(col("PLAYER_ID"), col("TEAM_ID"), col("SEASON"), col("SEASON_TYPE")).distinct()
         unseen(combos, table, args).select(col("PLAYER_ID"), col("TEAM_ID"))
@@ -149,8 +156,8 @@ object Fetch {
       transport: Fetcher.Transport)(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    // persist: the landing has several consumers (the header probe in
-    // resultSet, the quarantine write, the raw write) — without staging the
+    // persist: the landing has several consumers (the header probe, the
+    // quarantine write, the raw write) — without staging the
     // fetch results, each action would RE-ISSUE every HTTP request
     val fetched = FetchAll.fetchRaw(requestsFor(table, args, transport), transport)
       .persist()
@@ -168,12 +175,14 @@ object Fetch {
       case "team_game_log" => (Seq(LeagueGameLogSet), teamGameLogRaw)
       case "shot_details" => (Seq(ShotChartSet), shotDetailsRaw)
     }
-    // a delta run with nothing new fans out zero requests — land the empty
-    // table instead of dying on the header probe
-    val decoded =
-      if (fetched.isEmpty) emptyOf(shape)
-      else sets.map(s => RestDecoder.cast(RestDecoder.resultSet(parsed, s), shape))
-        .reduce(_.unionByName(_))
+    // one probe answers every set's headers; a delta run with nothing new
+    // fans out zero requests — land the empty table instead of dying on it
+    val decoded = RestDecoder.headers(parsed, fetched.toDF()) match {
+      case None => emptyOf(shape)
+      case Some(headers) =>
+        sets.map(s => RestDecoder.cast(RestDecoder.resultSet(parsed, s, headers, Nil), shape))
+          .reduce(_.unionByName(_))
+    }
     val raw =
       if (table != "shot_details") decoded
       else {
@@ -181,7 +190,7 @@ object Fetch {
         decoded.withColumn("SEASON", lit(season)).withColumn("SEASON_TYPE", lit(seasonType))
       }
     Warehouse.replaceDir(raw, s"${args.input}/${table}_raw")
-    spark.read.parquet(s"${args.input}/${table}_raw")
+    Warehouse.readTable(spark, s"${args.input}/${table}_raw")
     } finally {
       fetched.unpersist()
       ()
@@ -221,17 +230,18 @@ object Fetch {
         .toDF("params", "body")
       // a delta run with nothing new fans out zero requests — land the
       // empty table instead of dying on the header probe
-      val raw =
-        if (tagged.isEmpty) emptyOf(boxRaw)
-        else
-          RestDecoder.resultSet(
-              RestDecoder.parseTagged(tagged), BoxPlayerSet, keep = Seq("params"))
+      val parsed = RestDecoder.parseTagged(tagged)
+      val raw = RestDecoder.headers(parsed, tagged) match {
+        case None => emptyOf(boxRaw)
+        case Some(headers) =>
+          RestDecoder.resultSet(parsed, BoxPlayerSet, headers, keep = Seq("params"))
             .select(
               col("GAME_ID").cast("string").as("GAME_ID"),
               element_at(col("params"), "startPeriod").cast("int").as("PERIOD"),
               col("PLAYER_ID").cast("long").as("PLAYER_ID"),
               col("TEAM_ID").cast("long").as("TEAM_ID"),
               col("MIN").cast("string").as("MIN"))
+      }
       // MERGE with whatever is already landed: this run's slices replace
       // their (game, period) pairs, every other pair is kept — a delta run
       // fetching 5 new games (or an outage where every fetch failed and
@@ -240,14 +250,14 @@ object Fetch {
       // as their primary path
       val dir = s"${args.input}/$BoxTable"
       Warehouse.recover(spark, dir)
-      val merged = scala.util.Try(spark.read.parquet(dir)).toOption match {
+      val merged = scala.util.Try(Warehouse.readTable(spark, dir)).toOption match {
         case Some(existing) =>
           val keys = raw.select(col("GAME_ID"), col("PERIOD")).distinct()
           existing.join(keys, Seq("GAME_ID", "PERIOD"), "left_anti").unionByName(raw)
         case None => raw
       }
       Warehouse.replaceDir(merged, dir)
-      spark.read.parquet(dir)
+      Warehouse.readTable(spark, dir)
     } finally {
       fetched.unpersist()
       ()

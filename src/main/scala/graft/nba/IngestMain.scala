@@ -59,7 +59,7 @@ object IngestMain {
     val table = args.table.get
     val raw = transport match {
       case Some(t) => Fetch.landRaw(table, args, t)
-      case None => spark.read.parquet(s"${args.input}/${table}_raw")
+      case None => graft.sources.Warehouse.readTable(spark, s"${args.input}/${table}_raw")
     }
     val outDir = s"${args.output}/$table"
     graft.sources.Warehouse.recover(spark, outDir) // heal swaps before any read
@@ -70,9 +70,13 @@ object IngestMain {
     val deltaKeys =
       if (table == "shot_details") Seq("PLAYER_ID", "TEAM_ID", "SEASON", "SEASON_TYPE")
       else Seq("GAME_ID")
-    val in = Publish.deltaOnly(
-      Publish.scope(raw, args, seasonFromColumns = table == "shot_details"),
-      args.delta, outDir, deltaKeys)
+    val scoped = Publish.scope(raw, args, seasonFromColumns = table == "shot_details")
+    // a fetched delta landing already holds only unpublished keys, so the
+    // anti-join against the target could drop nothing; a pre-landed raw
+    // table can hold anything and keeps it
+    val in =
+      if (transport.isDefined && Fetch.landsUnseenOnly(table)) scoped
+      else Publish.deltaOnly(scoped, args.delta, outDir, deltaKeys)
 
     val enriched: DataFrame = table match {
       case "play_by_play" => Etl.playByPlay(in)

@@ -83,7 +83,7 @@ object PipelineMain {
     import graft.functions.GameIds
     import graft.sources.Warehouse
 
-    def tbl(name: String) = spark.read.parquet(s"${args.input}/$name")
+    def tbl(name: String) = Warehouse.readTable(spark, s"${args.input}/$name")
     val outDir = s"${args.output}/play_by_play_with_players"
     val errDir = s"${args.output}/lineup_errors"
     Warehouse.recover(spark, outDir) // heal interrupted swaps before any read
@@ -106,7 +106,7 @@ object PipelineMain {
     // run (delta or not), then add this run's failures
     val processed = pbp.select(col("GAME_ID")).distinct()
     val errDf = errors.toDF()
-    scala.util.Try(spark.read.parquet(errDir)).toOption match {
+    scala.util.Try(Warehouse.readTable(spark, errDir)).toOption match {
       case Some(exErr) =>
         Warehouse.replaceDir(
           exErr.join(processed, Seq("GAME_ID"), "left_anti").unionByName(errDf), errDir)

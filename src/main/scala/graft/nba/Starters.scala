@@ -1,7 +1,8 @@
 package graft.nba
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.{GameClock, GameIds}
 
@@ -21,141 +22,169 @@ import graft.functions.{GameClock, GameIds}
   *     neither yields 10 are surfaced by `violations` (the reference
   *     raises and fails the game).
   *
-  * Relational formulation (SURVEY.md §2.5 W2): instead of the reference's
-  * per-player loop, one window `row_number() == 1` over the unpivoted sub
-  * events — one shuffle on (GAME_ID, PERIOD, PLAYER_ID), built once and
-  * threaded into both paths of the combined derivation (collapsed to a
-  * single exchange when ReuseExchange matches the identical subtrees),
-  * and the per-period path choice is a semi/anti join on the tiny
-  * (game, period) key set, so the whole derivation is three scans and
-  * scale-free where the reference loops game-by-game, period-by-period.
+  * Execution: a game is a few hundred events and a few dozen box rows, so
+  * every form is one `groupByKey(GAME_ID)` (a `cogroup` with the box rows
+  * when there are any) and the rules run per game in Scala, like
+  * `Lineups`' tracker — one exchange per side, and the strict check
+  * needs no extra pass. `SECONDS_FROM_START` of the sub events is
+  * computed by `GameClock.secondsFromStart` before the typed step, so
+  * there is one definition of the clock and a null clock sorts first.
+  * Keys match like the equi-joins of a relational plan would: a
+  * null GAME_ID or PERIOD matches no sub event and no box row. The
+  * relational derivation lives on in test sources (`StartersReference`)
+  * as the reference this kernel is checked against.
   */
 object Starters {
 
-  private val GroupKeys = Seq("GAME_ID", "PERIOD", "PLAYER_ID")
+  /** A play-by-play row as the kernel reads it. */
+  case class Event(
+      GAME_ID: String,
+      PERIOD: Option[Int],
+      EVENTNUM: Option[Long],
+      EVENTMSGTYPE: Option[Int],
+      SECONDS_FROM_START: Option[Int],
+      PLAYER1_ID: Option[Long], PLAYER1_TEAM_ID: Option[Long],
+      PLAYER2_ID: Option[Long], PLAYER2_TEAM_ID: Option[Long],
+      PLAYER3_ID: Option[Long], PLAYER3_TEAM_ID: Option[Long])
 
-  /** First substitution event per (game, period, player), unpivoted to one
-    * row per involved player; at the same event the OUT row wins (reference
-    * :117-120 checks PLAYER1_ID first), hence the is_out DESC tiebreak.
-    * Columns: GAME_ID, PERIOD, PLAYER_ID, is_out. */
-  private def firstSubPerPlayer(pbp: DataFrame): DataFrame = {
-    val subs = pbp
-      .filter(col("EVENTMSGTYPE") === 8)
-      .withColumn("SECONDS_FROM_START",
-        GameClock.secondsFromStart(col("PERIOD"), col("PCTIMESTRING")))
-    val subLong = Seq((1, 1), (2, 0))
-      .map { case (k, isOut) =>
-        subs.select(col("GAME_ID"), col("PERIOD"),
-          col(s"PLAYER${k}_ID").as("PLAYER_ID"),
-          col("SECONDS_FROM_START"), col("EVENTNUM"), lit(isOut).as("is_out"))
-      }
-      .reduce(_ unionByName _)
-      .filter(col("PLAYER_ID").isNotNull)
-    val w = Window
-      .partitionBy(GroupKeys.map(col): _*)
-      .orderBy(col("SECONDS_FROM_START").asc, col("EVENTNUM").asc, col("is_out").desc)
-    subLong
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("GAME_ID"), col("PERIOD"), col("PLAYER_ID"), col("is_out"))
-  }
+  /** A (game, period, player, team) row: a box-score candidate on the way
+    * in (MIN already known non-null), a starter on the way out. */
+  case class Slot(GAME_ID: String, PERIOD: Option[Int],
+      PLAYER_ID: Option[Long], TEAM_ID: Option[Long])
 
-  /** first-sub-decides over a candidate set, stamped with the output
-    * schema (id, SEASON, SEASON_TYPE like the reference writer :190-195).
-    * `firstSubs` is a precomputed firstSubPerPlayer(pbp) — the combined
-    * derivation builds it once and threads the same subplan into both
-    * paths, so the sub-events window shuffle is planned once per path from
-    * one shared tree (and collapsed to a single exchange when ReuseExchange
-    * matches the canonicalized plans, which identical trees do). */
-  private def decide(candidates: DataFrame, firstSubs: DataFrame): DataFrame =
-    candidates
-      .join(firstSubs, GroupKeys, "left")
-      .filter(col("is_out").isNull || col("is_out") === 1)
-      .select(
-        GameIds.syntheticId(col("GAME_ID"), col("PERIOD"), col("PLAYER_ID")).as("id"),
-        col("GAME_ID"), col("PERIOD"), col("PLAYER_ID"), col("TEAM_ID"),
-        GameIds.extractSeason(col("GAME_ID")).as("SEASON"),
-        GameIds.extractSeasonType(col("GAME_ID")).as("SEASON_TYPE"))
+  private sealed trait Paths
+  private case object FallbackOnly extends Paths
+  private case object PrimaryOnly extends Paths
+  private final case class Combined(strict: Boolean) extends Paths
 
-  /** PBP fallback path (reference :90-122): candidates are the union of
-    * the three (id, team) pbp slots, team 0 / null dropped (:94-107).
-    * pbp must carry GAME_ID, PERIOD, EVENTNUM, EVENTMSGTYPE, PCTIMESTRING,
+  /** PBP fallback path (reference :90-122): candidates are the distinct
+    * (id, team) pbp slots, team 0 / null dropped (:94-107). pbp must carry
+    * GAME_ID, PERIOD, EVENTNUM, EVENTMSGTYPE, PCTIMESTRING,
     * PLAYER{1,2,3}_ID, PLAYER{1,2,3}_TEAM_ID. */
-  def derive(pbp: DataFrame): DataFrame =
-    decide(pbpCandidates(pbp), firstSubPerPlayer(pbp))
-
-  private def pbpCandidates(pbp: DataFrame): DataFrame =
-    Seq(1, 2, 3)
-      .map { k =>
-        pbp.select(col("GAME_ID"), col("PERIOD"),
-          col(s"PLAYER${k}_ID").as("PLAYER_ID"),
-          col(s"PLAYER${k}_TEAM_ID").as("TEAM_ID"))
-      }
-      .reduce(_ unionByName _)
-      .filter(col("TEAM_ID").isNotNull && col("TEAM_ID") =!= 0 && col("PLAYER_ID").isNotNull)
-      .distinct()
+  def derive(pbp: DataFrame): DataFrame = run(pbp, None, FallbackOnly)
 
   /** PRIMARY box-score path (reference :42-58, :73-88): candidates are the
-    * non-null-MIN rows of the period-sliced traditional box score.
-    * `boxPerPeriod` is PlayerStats keyed per period — GAME_ID, PERIOD,
-    * PLAYER_ID, TEAM_ID, MIN — i.e. one Endpoints.boxScoreForPeriod fetch
-    * per (game, period), landed as a table. */
+    * non-null-MIN rows of the period-sliced traditional box score, in the
+    * periods the play-by-play contains (a dirty fetch can carry a slice
+    * for a period that never happened; the reference iterates pbp periods
+    * only, :127-130). `boxPerPeriod` is PlayerStats keyed per period —
+    * GAME_ID, PERIOD, PLAYER_ID, TEAM_ID, MIN — i.e. one
+    * Endpoints.boxScoreForPeriod fetch per (game, period), landed as a
+    * table. */
   def deriveFromBox(pbp: DataFrame, boxPerPeriod: DataFrame): DataFrame =
-    decide(boxCandidates(boxPerPeriod, pbp), firstSubPerPlayer(pbp))
-
-  private def boxCandidates(boxPerPeriod: DataFrame, pbp: DataFrame): DataFrame =
-    boxPerPeriod
-      .filter(col("MIN").isNotNull)
-      .select(col("GAME_ID"), col("PERIOD"), col("PLAYER_ID"), col("TEAM_ID"))
-      .distinct()
-      // only periods the play-by-play actually contains: a dirty box fetch
-      // can carry a slice for a period that never happened, and without
-      // this semi-join its rows would emit starters for a phantom period
-      // (the reference iterates pbp periods only, :127-130)
-      .join(pbp.select(col("GAME_ID"), col("PERIOD")).distinct(),
-        Seq("GAME_ID", "PERIOD"), "left_semi")
+    run(pbp, Some(boxPerPeriod), PrimaryOnly)
 
   /** Combined derivation (reference process_game :125-161): per (game,
     * period), the primary result iff it yields exactly 10 starters, else
-    * the pbp fallback. Both paths are one-pass relational plans evaluated
-    * lazily (sharing one firstSubPerPlayer subplan); the choice is a
-    * semi/anti join on the (game, period) keys the primary satisfied.
+    * the pbp fallback.
     *
     * With `strict = true` the derivation enforces the reference's
-    * 10-per-period invariant in-plan (:135,146-161 raises and fails the
-    * game): every (game, period) in the play-by-play must end with exactly
-    * 10 starters, including periods that vanish entirely — checked with
-    * `assert_true` kept alive in a filter so column pruning cannot drop
-    * it, and failing at action time executor-side, no extra pass over pbp.
-    * With `strict = false` (default) violating periods appear with their
-    * wrong cardinality — run `violations` to surface them. */
-  def derive(pbp: DataFrame, boxPerPeriod: DataFrame, strict: Boolean = false): DataFrame = {
-    val firstSubs = firstSubPerPlayer(pbp)
-    val primary = decide(boxCandidates(boxPerPeriod, pbp), firstSubs)
-    val primaryOk = primary
-      .groupBy(col("GAME_ID"), col("PERIOD"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") === 10)
-      .select(col("GAME_ID"), col("PERIOD"))
-    val combined = primary.join(primaryOk, Seq("GAME_ID", "PERIOD"), "left_semi")
-      .unionByName(
-        decide(pbpCandidates(pbp), firstSubs)
-          .join(primaryOk, Seq("GAME_ID", "PERIOD"), "left_anti"))
-    if (!strict) combined
-    else {
-      // full-outer vs the pbp period keys so a period that produced 0
-      // starters still surfaces (as a phantom row with null PLAYER_ID)
-      val periods = pbp.select(col("GAME_ID"), col("PERIOD")).distinct()
-      val w = Window.partitionBy(col("GAME_ID"), col("PERIOD"))
-      combined
-        .join(periods, Seq("GAME_ID", "PERIOD"), "full_outer")
-        .withColumn("__n", count(col("PLAYER_ID")).over(w))
-        .filter(assert_true(col("__n") === 10,
-          concat(lit("starters invariant violated: game "), col("GAME_ID"),
-            lit(" period "), col("PERIOD"), lit(" has "), col("__n"),
-            lit(" starters, expected 10"))).isNull)
-        .filter(col("PLAYER_ID").isNotNull)
-        .drop("__n")
+    * 10-per-period invariant (:135,146-161 raises and fails the game):
+    * every (game, period) in the play-by-play must end with exactly 10
+    * starters, including periods that produced none, or the job fails at
+    * action time naming the first such period of the game. With
+    * `strict = false` (default) violating periods appear with their wrong
+    * cardinality — run `violations` to surface them. */
+  def derive(pbp: DataFrame, boxPerPeriod: DataFrame, strict: Boolean = false): DataFrame =
+    run(pbp, Some(boxPerPeriod), Combined(strict))
+
+  private def run(pbp: DataFrame, box: Option[DataFrame], paths: Paths): DataFrame = {
+    val spark = pbp.sparkSession
+    import spark.implicits._
+    val events = pbp.select(
+      col("GAME_ID").cast("string").as("GAME_ID"),
+      col("PERIOD").cast("int").as("PERIOD"),
+      col("EVENTNUM").cast("long").as("EVENTNUM"),
+      col("EVENTMSGTYPE").cast("int").as("EVENTMSGTYPE"),
+      // the clock of sub events only, as the relational form reads it: an
+      // unparsable clock on any other event must not fail the cast
+      when(col("EVENTMSGTYPE") === 8,
+        GameClock.secondsFromStart(col("PERIOD"), col("PCTIMESTRING"))).as("SECONDS_FROM_START"),
+      col("PLAYER1_ID").cast("long").as("PLAYER1_ID"),
+      col("PLAYER1_TEAM_ID").cast("long").as("PLAYER1_TEAM_ID"),
+      col("PLAYER2_ID").cast("long").as("PLAYER2_ID"),
+      col("PLAYER2_TEAM_ID").cast("long").as("PLAYER2_TEAM_ID"),
+      col("PLAYER3_ID").cast("long").as("PLAYER3_ID"),
+      col("PLAYER3_TEAM_ID").cast("long").as("PLAYER3_TEAM_ID"))
+      .as[Event].groupByKey(_.GAME_ID)
+    val starters: Dataset[Slot] = box match {
+      case Some(b) =>
+        val candidates = b.filter(col("MIN").isNotNull).select(
+          col("GAME_ID").cast("string").as("GAME_ID"),
+          col("PERIOD").cast("int").as("PERIOD"),
+          col("PLAYER_ID").cast("long").as("PLAYER_ID"),
+          col("TEAM_ID").cast("long").as("TEAM_ID"))
+          .as[Slot].groupByKey(_.GAME_ID)
+        events.cogroup(candidates)((gid, ev, bx) => ofGame(gid, ev.toArray, bx, paths))
+      case None =>
+        events.flatMapGroups((gid, ev) => ofGame(gid, ev.toArray, Iterator.empty, paths))
+    }
+    // the output shape of the reference writer (:190-195)
+    starters.select(
+      GameIds.syntheticId(col("GAME_ID"), col("PERIOD"), col("PLAYER_ID")).as("id"),
+      col("GAME_ID"), col("PERIOD"), col("PLAYER_ID"), col("TEAM_ID"),
+      GameIds.extractSeason(col("GAME_ID")).as("SEASON"),
+      GameIds.extractSeasonType(col("GAME_ID")).as("SEASON_TYPE"))
+  }
+
+  /** (SECONDS_FROM_START, EVENTNUM, is-out) of a sub event: earliest first,
+    * nulls first, and at the same event the OUT wins (reference :117-120
+    * checks PLAYER1_ID first). */
+  private val subOrder: Ordering[(Option[Int], Option[Long], Boolean)] =
+    Ordering.Tuple3(Ordering.Option(Ordering.Int), Ordering.Option(Ordering.Long),
+      Ordering.Boolean.reverse)
+
+  /** The starters of one game under `paths`. */
+  private def ofGame(gid: String, events: Array[Event], box: Iterator[Slot],
+      paths: Paths): Iterator[Slot] = {
+    // first substitution per (period, player); a null game id or period
+    // matches nothing, so those players count as never subbed
+    val firstSub = mutable.HashMap.empty[(Int, Long), (Option[Int], Option[Long], Boolean)]
+    if (gid != null)
+      for {
+        e <- events if e.EVENTMSGTYPE.contains(8)
+        period <- e.PERIOD
+        (player, isOut) <- Seq(e.PLAYER1_ID -> true, e.PLAYER2_ID -> false)
+        id <- player
+      } {
+        val sub = (e.SECONDS_FROM_START, e.EVENTNUM, isOut)
+        if (firstSub.get((period, id)).forall(subOrder.lt(sub, _))) firstSub((period, id)) = sub
+      }
+    def started(s: Slot): Boolean =
+      (for (p <- s.PERIOD; id <- s.PLAYER_ID; sub <- firstSub.get((p, id))) yield sub._3)
+        .getOrElse(true)
+
+    val periods = events.map(_.PERIOD).distinct.sorted
+    def fallback: Seq[Slot] = events.toSeq.flatMap { e =>
+      Seq(e.PLAYER1_ID -> e.PLAYER1_TEAM_ID, e.PLAYER2_ID -> e.PLAYER2_TEAM_ID,
+        e.PLAYER3_ID -> e.PLAYER3_TEAM_ID).collect {
+        case (p @ Some(_), t @ Some(team)) if team != 0 => Slot(gid, e.PERIOD, p, t)
+      }
+    }.distinct.filter(started)
+    def primary: Seq[Slot] =
+      if (gid == null) Nil
+      else box.filter(b => b.PERIOD.isDefined && periods.contains(b.PERIOD))
+        .toSeq.distinct.filter(started)
+
+    paths match {
+      case FallbackOnly => fallback.iterator
+      case PrimaryOnly => primary.iterator
+      case Combined(strict) =>
+        val fromBox = primary.groupBy(_.PERIOD)
+        val fromPbp = fallback.groupBy(_.PERIOD)
+        periods.iterator.flatMap { period =>
+          val chosen = fromBox.get(period).filter(_.size == 10)
+            .getOrElse(fromPbp.getOrElse(period, Nil))
+          if (!strict) chosen
+          else {
+            val named = chosen.filter(_.PLAYER_ID.isDefined)
+            if (named.size != 10)
+              throw new IllegalStateException(
+                s"starters invariant violated: game $gid period ${period.getOrElse("null")} " +
+                  s"has ${named.size} starters, expected 10")
+            named
+          }
+        }
     }
   }
 

@@ -11,13 +11,14 @@ import org.apache.spark.sql.functions._
   * the scoped games, and publish idempotently.
   *
   * The reference raises per game when a period cannot produce 10 starters
-  * (:159-161); here the strict combined derivation enforces that invariant
-  * in-plan, so the job fails at action time with the offending (game,
-  * period) in the message — same contract, one distributed pass instead of
-  * a per-game loop. When no box table is landed, the same strict check
-  * runs over the pbp-fallback-only derivation (an empty primary makes
-  * every period fall back, which is exactly the reference's behavior when
-  * every box fetch comes back dirty).
+  * (:159-161); here the strict combined derivation checks that invariant
+  * inside its per-game kernel, so the job fails at action time with the
+  * offending (game, period) in the message — same contract, one
+  * distributed pass instead of a driver loop. When no box table is
+  * landed, the same strict check runs over the pbp-fallback-only
+  * derivation (an empty primary makes every period fall back, which is
+  * exactly the reference's behavior when every box fetch comes back
+  * dirty).
   *
   * Delta mode (:167-183): only games absent from the output table are
   * derived, then plain-appended. Non-delta reruns merge-and-swap the
@@ -46,9 +47,8 @@ object StartersMain {
       transport: Option[graft.sources.Fetcher.Transport] = None): Unit = {
     implicit val spark: SparkSession = spark0
     import spark.implicits._
-    import graft.functions.GameIds
 
-    def tbl(name: String) = spark.read.parquet(s"${args.input}/$name")
+    def tbl(name: String) = graft.sources.Warehouse.readTable(spark, s"${args.input}/$name")
     val outDir = s"${args.output}/$TableName"
     graft.sources.Warehouse.recover(spark, outDir) // heal swaps before any read
 
@@ -58,11 +58,6 @@ object StartersMain {
     // primary path candidates, when the period-sliced box scores are landed;
     // an empty primary sends every period down the pbp fallback (still
     // strict-checked), matching the reference with no usable box data.
-    // The box table MUST be scoped to the games this run processes (the
-    // reference fetches box scores inside the per-game loop, so its box
-    // data is inherently game-scoped): an unscoped box table would emit
-    // starters for out-of-scope games — on a delta rerun, a duplicate of
-    // every already-processed game.
     val box: DataFrame = transport match {
       case Some(t) =>
         Fetch.landBoxScores(pbp.select(col("GAME_ID"), col("PERIOD")), args, t)
@@ -70,8 +65,12 @@ object StartersMain {
         .getOrElse(Seq.empty[(String, Int, Long, Long, Option[Double])]
           .toDF("GAME_ID", "PERIOD", "PLAYER_ID", "TEAM_ID", "MIN"))
     }
-    val boxScoped = box.join(
-      pbp.select(col("GAME_ID")).distinct(), Seq("GAME_ID"), "left_semi")
+    // The derivation ignores box rows of games without events, so scoping
+    // the box table only bounds what the night shuffles: the same scope and
+    // delta rules as the play-by-play keep it to this run's games without
+    // a join against the play-by-play (the reference fetches box scores
+    // inside its per-game loop, so its box data is game-scoped too).
+    val boxScoped = Publish.deltaOnly(Publish.scope(box, args), args.delta, outDir, Seq("GAME_ID"))
     val newRows = Starters.derive(pbp, boxScoped, strict = true)
 
     Publish.idempotent(newRows, outDir, args.delta)

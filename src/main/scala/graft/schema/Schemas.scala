@@ -18,7 +18,9 @@ import org.apache.spark.sql.types._
   * decode-time shapes for the fetch boundary (`RestDecoder.cast` — which
   * now REQUIRES every declared column, so casting against these catches
   * API drift at the source); the parquet ingest path reads the landed
-  * files' embedded schemas and does not re-apply them.
+  * files' embedded schemas (`Warehouse.readTable`, from one footer on the
+  * driver) and does not re-apply them — a pre-landed raw table may carry
+  * any shape, and a declared read would drop or null-fill its columns.
   */
 object Schemas {
 

@@ -15,7 +15,9 @@ import org.apache.spark.sql.types._
   * column, like the reference's pandas inference) and cast by the caller
   * against the declared schemas in [[graft.schema.Schemas]]. Non-empty
   * rowSets only, one DataFrame per set name (reference skips empty sets,
-  * api/smart.py:570).
+  * api/smart.py:570). A set's columns come from its headers, which take
+  * one driver-side probe: per set in [[resultSet]], or for all sets of a
+  * landing at once in [[headers]].
   */
 object RestDecoder {
 
@@ -53,13 +55,36 @@ object RestDecoder {
     * `params` tag of [[parseTagged]]).
     */
   def resultSet(parsed: DataFrame, name: String, keep: Seq[String] = Nil): DataFrame = {
-    val subset = parsed.filter(col("name") === name)
-    val headers: Seq[String] = subset.select(col("headers")).limit(1)
-      .collect().headOption.map(_.getSeq[String](0)).getOrElse(Seq.empty)
-    require(headers.nonEmpty, s"result set '$name' absent or empty")
-    subset.select(keep.map(col) ++ headers.zipWithIndex.map { case (h, i) =>
-      col("row").getItem(i).as(h)
+    val first = parsed.filter(col("name") === name).select(col("headers")).limit(1)
+      .collect().headOption.flatMap(r => Option(r.getSeq[String](0)))
+    resultSet(parsed, name, first.map(name -> _).toMap, keep)
+  }
+
+  /** [[resultSet]] with the headers already probed by [[headers]], so a
+    * caller decoding several sets of one response probes once. */
+  def resultSet(parsed: DataFrame, name: String, headers: Map[String, Seq[String]],
+      keep: Seq[String]): DataFrame = {
+    val hs = headers.getOrElse(name, Nil)
+    require(hs.nonEmpty, s"result set '$name' absent or empty")
+    parsed.filter(col("name") === name).select(keep.map(col) ++ hs.zipWithIndex.map {
+      case (h, i) => col("row").getItem(i).as(h)
     }: _*)
+  }
+
+  /** The headers of every non-empty result set in `parsed`, by set name,
+    * from one job that collects the distinct (name, headers) pairs — or
+    * None when `source`, the documents `parsed` came from, has no row at
+    * all (a fan-out with nothing to fetch, as opposed to responses without
+    * the set). */
+  def headers(parsed: DataFrame, source: DataFrame): Option[Map[String, Seq[String]]] = {
+    import parsed.sparkSession.implicits._
+    val noSet = source.select(lit(null).cast(StringType).as("name"),
+      lit(null).cast(ArrayType(StringType)).as("headers"))
+    val pairs = parsed.select(col("name"), col("headers")).unionByName(noSet)
+      .as[(Option[String], Option[Seq[String]])]
+      .mapPartitions(_.distinct).collect().distinct
+    if (pairs.isEmpty) None
+    else Some(pairs.collect { case (Some(n), Some(hs)) => n -> hs }.toMap)
   }
 
   /** Cast the string-typed columns of a decoded result set to a declared

@@ -1,7 +1,14 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Physical-design analog of the reference's Postgres DDL hardening
   * (reference: database/db_client.py:94-150; SURVEY.md §2.1 S5/S7/S9).
@@ -21,8 +28,46 @@ object Warehouse {
   def writeTable(df: DataFrame, dir: String, mode: SaveMode = SaveMode.Append): Unit =
     df.write.mode(mode).partitionBy(PartitionCols: _*).parquet(dir)
 
+  /** `spark.read.parquet(dir)` without its schema-inference job: Spark's
+    * schema is read on the driver from the footer of the data file its own
+    * inference samples (the first visible one in path order, there being
+    * no summary files) and handed to `spark.read.schema`; partition
+    * columns are still discovered from the directory names. A table with
+    * no data file or no Spark schema in the footer (a non-Spark writer) is
+    * read by `spark.read.parquet` itself, so such tables — and a missing
+    * `dir` — behave exactly as before. */
   def readTable(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    footerSchema(spark, dir) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+
+  /** The footer key under which Spark's parquet writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  private def footer(fs: FileSystem, file: Path): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, fs.getConf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Rows in a parquet file: the sum of its row groups' counts, from the
+    * footer alone. */
+  private def footerRows(fs: FileSystem, file: Path): Long =
+    footer(fs, file).getBlocks.asScala.map(_.getRowCount).sum
+
+  /** Spark's schema of the table at `dir` from one footer, or None when
+    * only Spark's own inference can answer (see [[readTable]]). */
+  private def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) None
+    else visibleDataFiles(fs, root).sortBy(_.toString).headOption.flatMap { file =>
+      Try(footer(fs, file)).toOption
+        .flatMap(f => Option(f.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
+        .flatMap(json => Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+    }
+  }
 
   /** S9 CSV sink for golden-file parity (reference: test.py:15). */
   def writeCsv(df: DataFrame, dir: String): Unit =
@@ -734,10 +779,10 @@ object Warehouse {
       require(allParts.length <= 1, s"coalesce(1) wrote ${allParts.length} parts")
       // an all-rows-matched file writes a 0-row part — drop the file
       // entirely rather than publish an empty husk (one footer read of
-      // the just-written staged file, negligible next to the rewrite)
+      // the just-written staged file on the driver, no Spark job)
       val parts =
-        if (allParts.nonEmpty &&
-            spark.read.parquet(staging.toString).isEmpty) Array.empty[org.apache.hadoop.fs.FileStatus]
+        if (allParts.nonEmpty && footerRows(fs, allParts.head.getPath) == 0)
+          Array.empty[org.apache.hadoop.fs.FileStatus]
         else allParts
       val old = new Path(p.getParent, s".${p.getName}.old")
       fs.delete(old, false)

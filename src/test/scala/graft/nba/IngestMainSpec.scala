@@ -160,6 +160,49 @@ class IngestMainSpec extends SparkSpec {
     assert(tables.map(t => published(t).count()) == counts)
     assert(spark.read.parquet(s"$root/in/play_by_play_raw").isEmpty)
   }
+
+  test("a fetched delta appends without reading the published table again") {
+    import IngestMainSpec.CountingApi
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
+    val root = Files.createTempDirectory("graft_ing").toString
+    val a = args(s"$root/in", s"$root/out", "play_by_play")
+    val target = new org.apache.hadoop.fs.Path(s"$root/out/play_by_play").toUri.getPath
+    CountingApi.shown = Seq("0022400021", "0022400022")
+    IngestMain.runWith(spark, a, Some(CountingApi))
+    // the paths each write into the target scanned
+    val scans = new java.util.concurrent.LinkedBlockingQueue[Seq[String]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.collectFirst {
+          case w: InsertIntoHadoopFsRelationCommand if w.outputPath.toUri.getPath == target =>
+            w.query.collect { case l: LogicalRelation => l.relation }
+              .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toUri.getPath) }
+              .flatten
+        }.foreach(scans.put)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      CountingApi.shown = Seq("0022400021", "0022400022", "0022400023")
+      IngestMain.runWith(spark, a.copy(delta = true), Some(CountingApi))
+      val scanned = scans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(scanned != null, "no write into the target was observed")
+      assert(!scanned.exists(_.startsWith(target)),
+        s"the delta append re-read the published table: $scanned")
+    } finally spark.listenerManager.unregister(listener)
+    val published = spark.read.parquet(s"$root/out/play_by_play")
+    assert(published.select("GAME_ID").distinct().as[String].collect().toSet ==
+      Set("0022400021", "0022400022", "0022400023"))
+    assert(published.count() == 6)
+    // the season-granular game log lands every game again: its delta
+    // still drops the published ones
+    val log = args(s"$root/in", s"$root/out", "team_game_log")
+    IngestMain.runWith(spark, log, Some(FakeStatsApi))
+    IngestMain.runWith(spark, log.copy(delta = true), Some(FakeStatsApi))
+    assert(spark.read.parquet(s"$root/out/team_game_log").count() == 4)
+  }
 }
 
 object IngestMainSpec {

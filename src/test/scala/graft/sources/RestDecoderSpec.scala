@@ -62,4 +62,20 @@ class RestDecoderSpec extends SparkSpec {
       RestDecoder.resultSet(parsed, "DoesNotExist")
     }
   }
+
+  test("headers probes every set at once and tells no documents from a missing set") {
+    val docs = Seq(envelope).toDS()
+    val hs = RestDecoder.headers(RestDecoder.parse(docs), docs.toDF()).get
+    assert(hs.keySet == Set("AwayTeam", "HomeTeam"), "an empty rowSet has no headers to probe")
+    assert(RestDecoder.resultSet(RestDecoder.parse(docs), "HomeTeam", hs, Nil)
+      .select("PERSON_ID").as[String].collect().toSeq == Seq("101"))
+    val none = Seq.empty[String].toDS()
+    assert(RestDecoder.headers(RestDecoder.parse(none), none.toDF()).isEmpty)
+    val other = Seq("""{"resultSets":[]}""").toDS()
+    assert(RestDecoder.headers(RestDecoder.parse(other), other.toDF()).contains(Map.empty))
+    val e = intercept[IllegalArgumentException] {
+      RestDecoder.resultSet(RestDecoder.parse(other), "AwayTeam", Map.empty, Nil)
+    }
+    assert(e.getMessage.contains("result set 'AwayTeam' absent or empty"))
+  }
 }
