@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.VectorSim
+import graft.ops.{Checkpoints, VectorSim}
 import graft.queries.{DedupOps, TextOps, VectorOps}
 import graft.sources.{Jsonl, Warehouse}
 
@@ -81,7 +81,20 @@ object CorpusStreamMain {
     * together admit exactly one — the corpus index knows neither, so no
     * corpus-side probe can catch them. Batch pairs are few, so the pass
     * adds a handful of small jobs per batch, not a shuffle of anything
-    * corpus-sized. */
+    * corpus-sized.
+    *
+    * Staging: the docs left after decontamination, the semantic drop and
+    * the corpus probe are checkpointed once together with their shingles
+    * (`localCheckpoint`, as [[GateState]] stages its accumulators). The
+    * pair pass and the returned frame both read that staged frame, so the
+    * probe runs once per batch; the pair pass's band table is released
+    * before this returns. The returned frame reads two batch-sized local
+    * checkpoints and nothing else — the staged survivors and the
+    * component labels — so [[publishBatch]] writes staged rows minus the
+    * (broadcast) drop set. Those blocks belong to the caller: [[start]]
+    * releases them (`Checkpoints.rddsOf` of this frame) once the batch is
+    * published and absorbed; a caller that simply drops the frame leaves
+    * them to Spark's ContextCleaner. */
   def curateBatch(batch: DataFrame, corpusSh: DataFrame,
       mixRates: Seq[(String, String)] = Seq.empty,
       mixDefault: String = "ff",
@@ -110,17 +123,17 @@ object CorpusStreamMain {
       if (n.columns.contains("n_chars")) n.withColumn("n_chars", length(col("text")))
       else n
     }
-    val mixedSh = DedupOps.shingledOf(mixed)
-    // decontamination drops ids from BOTH frames via the same anti-join,
-    // so the gate reuses the one shingle pass instead of re-shingling the
-    // survivors (the hot stage of the always-on path)
-    val (decontaminated, decontaminatedSh) = benchSet match {
+    // every stage below carries each doc beside its shingles (`sh`, null
+    // under the n-gram length): the shingle pass runs once per doc, and
+    // the drops are anti-joins on the one frame
+    val mixedSh = DedupOps.withShingles(mixed)
+    val decontaminated = benchSet match {
       case Some(b) =>
-        val hot = DedupOps.contaminationAgainstSet(mixedSh, b, broadcastBench)
+        val hot = DedupOps.contaminationAgainstSet(DedupOps.shinglesIn(mixedSh), b,
+            broadcastBench)
           .filter(col("n_hits") >= minHits).select("doc_id")
-        (mixed.join(hot, Seq("doc_id"), "left_anti"),
-          mixedSh.join(hot, Seq("doc_id"), "left_anti"))
-      case None => (mixed, mixedSh)
+        mixedSh.join(hot, Seq("doc_id"), "left_anti")
+      case None => mixedSh
     }
     // SEMANTIC decontamination directly after the shingle pass — the
     // batch twin's exact placement (CorpusMain: shingle decontam ->
@@ -128,15 +141,9 @@ object CorpusStreamMain {
     // than symmetry: run any LATER and an eval paraphrase could first
     // WIN an intra-batch near-dup collapse (dropping an innocent text
     // twin that is semantically clean) and then be dropped itself —
-    // losing both docs where the batch twin publishes the innocent one
-    // (the r12 review's stream/batch-drift finding).
-    val (sdocs, sdocsSh) = semanticDrop match {
-      case Some(flaggedOf) =>
-        val flaggedIds = flaggedOf(decontaminated)
-        (decontaminated.join(flaggedIds, Seq("doc_id"), "left_anti"),
-          decontaminatedSh.join(flaggedIds, Seq("doc_id"), "left_anti"))
-      case None => (decontaminated, decontaminatedSh)
-    }
+    // losing both docs where the batch twin publishes the innocent one.
+    val sdocs = semanticDrop.fold(decontaminated)(flaggedOf =>
+      decontaminated.join(flaggedOf(decontaminated), Seq("doc_id"), "left_anti"))
     // the gate emits verified (doc, corpus_doc) pairs; a doc matching
     // SEVERAL corpus docs must still drop exactly once, so the anti-join
     // keys on the distinct flagged ids. The corpus band index — the
@@ -144,16 +151,27 @@ object CorpusStreamMain {
     // repeated cost of an always-on gate, so a caller passes the prebuilt
     // persisted one; the default rebuilds it (small/batch use).
     val flagged = DedupOps
-      .nearDupAgainstIndex(sdocsSh,
+      .nearDupAgainstIndex(DedupOps.shinglesIn(sdocs),
         corpusIndex.getOrElse(DedupOps.corpusBandIndex(corpusSh)), corpusSh)
       .select(col("doc_id")).distinct()
-    val survived = sdocs.join(flagged, Seq("doc_id"), "left_anti")
-    val survivedSh = sdocsSh.join(flagged, Seq("doc_id"), "left_anti")
-    // intra-batch self-dedup: same pair producer + same collapse as the
-    // batch twin's corpus-wide pass, restricted to this batch
-    val pairs = DedupOps.minhashNearDup(survivedSh)
-      .select(col("doc_a"), col("doc_b"))
-    DedupOps.dedupeCorpus(survived, pairs)
+    // the survivors are staged ONCE: the intra-batch pair pass reads
+    // them twice (band table + verify side) and the publish once more,
+    // and each read would otherwise re-run the scan, decontamination
+    // and corpus probe above
+    val staged = sdocs.join(flagged, Seq("doc_id"), "left_anti").localCheckpoint(true)
+    // intra-batch self-dedup: same pair producer + same collapse
+    // (min-doc_id canonical, DedupOps.dedupeCorpus) as the batch twin's
+    // corpus-wide pass, restricted to this batch. The pair pass persists
+    // its band table; the labels are checkpointed when components
+    // returns, so the table is released here — the gate never clears the
+    // session's cache, and a table per batch would pile up forever.
+    val (pairs, bands) = DedupOps.minhashNearDupWithBands(DedupOps.shinglesIn(staged))
+    val drop =
+      try DedupOps.components(pairs.select(col("doc_a"), col("doc_b")))
+        .filter(col("doc_id") =!= col("label")).select(col("doc_id"))
+      finally { bands.unpersist(); () }
+    // the drop set holds batch docs only, so it broadcasts
+    staged.drop("sh").join(broadcast(drop), Seq("doc_id"), "left_anti")
       .withColumn("split", TextOps.splitColumn(col("doc_id")))
   }
 
@@ -241,17 +259,18 @@ object CorpusStreamMain {
       .foreachBatch { (b: DataFrame, id: Long) =>
         val docs = decode.fold(b)(d => d(b, id))
         val ids = docs.select("doc_id")
-        val curated = state.vectorGate(
-          curateBatch(docs, state.corpusSh, mixRates, mixDefault,
-            benchSet, minHits, broadcastBench,
-            corpusIndex = Some(state.probeIdx(ids, id)),
-            normalize = normalize, semanticDrop = semanticDrop),
-          ids, id)
-        publishBatch(curated, output, id)
+        val textCurated = curateBatch(docs, state.corpusSh, mixRates, mixDefault,
+          benchSet, minHits, broadcastBench,
+          corpusIndex = Some(state.probeIdx(ids, id)),
+          normalize = normalize, semanticDrop = semanticDrop)
+        publishBatch(state.vectorGate(textCurated, ids, id), output, id)
         // absorb from the PUBLISHED directory — the on-disk truth, which
         // also severs lineage back to the stream source
         state.absorb(id, b.sparkSession.read
           .parquet(s"$output/batch=$id").select("doc_id", "text"))
+        // the batch is on disk and folded in: curateBatch's staging is
+        // dead weight now
+        Checkpoints.rddsOf(textCurated).foreach(_.unpersist(false))
       }
       .start()
   }

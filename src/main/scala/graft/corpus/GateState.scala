@@ -2,7 +2,7 @@ package graft.corpus
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Checkpoints
@@ -75,7 +75,8 @@ final class GateState private (
     private var absIdx: DataFrame,
     private var absVecIdx: Option[DataFrame],
     private var absorbedBatches: Set[Long],
-    private var absBlocks: Seq[RDD[_]]) {
+    private var absBlocks: Seq[RDD[_]],
+    private var absRows: (Long, Long, Option[Long])) { // (shingle, index, vector index)
 
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[GateState])
 
@@ -143,21 +144,27 @@ final class GateState private (
     * accumulator so every LATER batch is gated against them. `published`
     * is read back from the batch's published directory ((doc_id, text)
     * suffice) — the on-disk truth, which also severs any lineage back to
-    * the stream source. Idempotent per `batchId`: a replayed batch never
-    * double-folds. Logs [[absorbedStats]] after each fold — the row
-    * counts are block-local scans of the just-checkpointed accumulators,
-    * the same O(absorbed) order the re-checkpoint itself already pays. */
+    * the stream source, so the state never pins the batch's
+    * [[CorpusStreamMain.curateBatch]] staging (its caller releases that
+    * once this returns). Idempotent per `batchId`: a replayed batch never
+    * double-folds. Staging here: each accumulator is re-checkpointed
+    * (`localCheckpoint`) and the previous generation's blocks are
+    * released at once; the state owns the new blocks until [[close]].
+    * Logs [[absorbedStats]] after each fold — its row counts ride the
+    * checkpoint jobs as Observations, so the log line costs no job. */
   def absorb(batchId: Long, published: DataFrame): Unit = {
     if (!absorbedBatches(batchId)) {
       val freshSh = DedupOps.shingledOf(published)
-      val newSh = absSh.unionByName(freshSh).localCheckpoint(true)
-      val newIdx = absIdx.unionByName(DedupOps.corpusBandIndex(freshSh))
-        .localCheckpoint(true)
-      val newVecIdx = vecSide.map { case (vecs, _, _) =>
-        absVecIdx.get.unionByName(VectorOps.vectorBandIndex(vecs.join(
-            published.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")))
-          .localCheckpoint(true)
+      val (newSh, shRows) =
+        GateState.checkpointCounted(absSh.unionByName(freshSh))
+      val (newIdx, idxRows) = GateState.checkpointCounted(
+        absIdx.unionByName(DedupOps.corpusBandIndex(freshSh)))
+      val newVec = vecSide.map { case (vecs, _, _) =>
+        GateState.checkpointCounted(absVecIdx.get.unionByName(
+          VectorOps.vectorBandIndex(vecs.join(
+            published.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"))))
       }
+      val newVecIdx = newVec.map(_._1)
       // the new generation is self-contained — the previous one's blocks
       // are dead weight and released NOW, not left to the ContextCleaner
       absBlocks.foreach(_.unpersist(false))
@@ -166,6 +173,7 @@ final class GateState private (
       absVecIdx = newVecIdx
       absorbedBatches += batchId
       absBlocks = (Seq(newSh, newIdx) ++ newVecIdx).flatMap(Checkpoints.rddsOf)
+      absRows = (shRows, idxRows, newVec.map(_._2))
       val s = absorbedStats()
       log.info(s"gate absorbed batch=$batchId: batches=${s.batches} " +
         s"shingleRows=${s.shingleRows} indexRows=${s.indexRows} " +
@@ -177,14 +185,14 @@ final class GateState private (
   }
 
   /** Size of the absorbed accumulator — what [[absorb]] logs per batch
-    * and an operator alerts on. Row counts scan the checkpointed blocks;
-    * bytes come from the block manager's storage report (no job). */
+    * and an operator alerts on. Row counts were observed when the
+    * accumulators were checkpointed; bytes come from the block manager's
+    * storage report. Runs no job. */
   def absorbedStats(): GateStats = {
     val ids = absBlocks.map(_.id).toSet
     val stored = absSh.sparkSession.sparkContext.getRDDStorageInfo
       .filter(i => ids(i.id)).map(i => i.memSize + i.diskSize).sum
-    GateStats(absorbedBatches.size, absSh.count(), absIdx.count(),
-      absVecIdx.map(_.count()), stored)
+    GateStats(absorbedBatches.size, absRows._1, absRows._2, absRows._3, stored)
   }
 
   /** Release every block this state holds (base + absorbed + the vectors
@@ -250,8 +258,8 @@ object GateState {
     val baseIdx = baseIndex.getOrElse(
       DedupOps.corpusBandIndex(baseSh).localCheckpoint(true))
     val seed = published.getOrElse(corpus.limit(0))
-    val absSh = DedupOps.shingledOf(seed).localCheckpoint(true)
-    val absIdx = DedupOps.corpusBandIndex(absSh).localCheckpoint(true)
+    val (absSh, shRows) = checkpointCounted(DedupOps.shingledOf(seed))
+    val (absIdx, idxRows) = checkpointCounted(DedupOps.corpusBandIndex(absSh))
     val vecSide = vectors.map { case (vecsRaw, threshold) =>
       // persisted because every batch scans it twice (incoming lookup +
       // candidate verification). At corpus scale persisting the WHOLE
@@ -273,14 +281,24 @@ object GateState {
           .localCheckpoint(true))
       (vecs, threshold, baseVecIdx)
     }
-    val absVecIdx = vecSide.map { case (vecs, _, _) =>
-      VectorOps.vectorBandIndex(vecs.join(
-          seed.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"))
-        .localCheckpoint(true)
+    val absVec = vecSide.map { case (vecs, _, _) =>
+      checkpointCounted(VectorOps.vectorBandIndex(vecs.join(
+        seed.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")))
     }
+    val absVecIdx = absVec.map(_._1)
     new GateState(baseSh, baseIdx, vecSide, absSh, absIdx, absVecIdx,
       absorbedBatchIds,
-      (Seq(absSh, absIdx) ++ absVecIdx).flatMap(Checkpoints.rddsOf))
+      (Seq(absSh, absIdx) ++ absVecIdx).flatMap(Checkpoints.rddsOf),
+      (shRows, idxRows, absVec.map(_._2)))
+  }
+
+  /** `df` checkpointed eagerly (`localCheckpoint`), with its row count
+    * taken by an Observation that rides the checkpoint job — no count
+    * job afterwards. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val staged = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
+    (staged, obs.get("rows").asInstanceOf[Long])
   }
 
   /** [[build]] for a (re)starting stream: heal any interrupted swap under

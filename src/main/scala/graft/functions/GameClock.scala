@@ -19,16 +19,22 @@ object GameClock {
   private[graft] val OvertimePeriodSec = 300
   private[graft] val RegulationTotalSec = 4 * RegulationPeriodSec // 2880
 
-  /** Seconds elapsed in the period so far given the remaining 'MM:SS'. */
+  /** Seconds elapsed in the period so far given the remaining 'MM:SS';
+    * null for any clock that is not two integer fields around one ':'
+    * ("", "bad", "7", "1:2:3"). A plain cast or index would throw under
+    * ANSI mode and fail the whole job over one malformed row; null lets
+    * a caller route the row instead (the lineup tracker quarantines a
+    * game with a null SECONDS_FROM_START). */
   private def elapsedInPeriod(period: Column, clock: Column): Column = {
     val parts = split(clock, ":")
-    val remaining = parts.getItem(0).cast("int") * 60 + parts.getItem(1).cast("int")
+    val remaining = when(size(parts) === 2,
+      get(parts, lit(0)).try_cast("int") * 60 + get(parts, lit(1)).try_cast("int"))
     when(period <= 4, lit(RegulationPeriodSec) - remaining)
       .otherwise(lit(OvertimePeriodSec) - remaining)
   }
 
   /** F1: ('MM:SS' remaining, period) -> integer seconds from game start
-    * (reference: utils/utils.py:19-27).
+    * (reference: utils/utils.py:19-27); null for a malformed clock.
     */
   def secondsFromStart(period: Column, clock: Column): Column = {
     val periodStart =

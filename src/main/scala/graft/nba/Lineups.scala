@@ -6,6 +6,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{GameClock, GameIds}
+import graft.ops.Checkpoints
 import graft.schema.{PbpEvent, PbpWithPlayers, Stint}
 
 /** Per-game side input of the lineup tracker, shuffled together with the
@@ -168,8 +169,8 @@ object Lineups {
   }
 
   /** T4 quarantine variant: one pass, rows and per-game errors as separate
-    * datasets (the union is persisted once; both sides filter it). The
-    * third element releases that cache — call it once both datasets have
+    * datasets (the pass is staged once; both sides filter it). The third
+    * element releases the staged blocks — call it once both datasets have
     * been consumed, or the blocks stay pinned for the session. */
   def withPlayersAndErrors(
       pbp: DataFrame,
@@ -178,23 +179,62 @@ object Lineups {
       teamGameLog: Option[DataFrame] = None)(
       implicit spark: SparkSession):
       (Dataset[PbpWithPlayers], Dataset[GameError], () => Unit) = {
+    val t = tracked(pbp, rotations, starters, teamGameLog)
+    (t.rows, t.errors, t.release)
+  }
+
+  /** What one quarantine pass computed: the rows, the per-game errors
+    * (tracker failures and undecodable games), the ids of every game the
+    * pass saw events of, and the release of the one staged outcome set
+    * all three read. */
+  final case class Tracked(
+      rows: Dataset[PbpWithPlayers],
+      errors: Dataset[GameError],
+      processed: Dataset[String],
+      release: () => Unit)
+
+  /** [[withPlayersAndErrors]] plus the processed game ids, all three
+    * read from the one staged outcome set: a caller that heals its
+    * quarantine by those ids (PipelineMain) derives nothing from the
+    * play-by-play again. An undecodable game is processed under its id
+    * (a null GAME_ID under the sentinel its error row carries).
+    *
+    * The pass runs here, staged by an eager `localCheckpoint` rather than
+    * a persist: in delta mode `pbp` reads the output table (the anti-join
+    * of published games), and the write of the rows re-caches every
+    * cached plan over that path — a persisted outcome set would be
+    * recomputed after the write, against the new output. */
+  def tracked(
+      pbp: DataFrame,
+      rotations: DataFrame,
+      starters: Option[DataFrame] = None,
+      teamGameLog: Option[DataFrame] = None)(
+      implicit spark: SparkSession): Tracked = {
     import spark.implicits._
     val (ev, badGames, side) =
       prepare(pbp, rotations, starters, teamGameLog, sanitize = true)
-    val decodeErrors = badGames.map(g => GameError(g,
-      s"undecodable play-by-play: null in one of ${RequiredEventCols.mkString("/")}"))
-    val outcomes = ev.groupByKey(_.GAME_ID)
+    // per output row: a lineup row, an error, or a processed-game marker
+    val games = ev.groupByKey(_.GAME_ID)
       .cogroup(side.groupByKey(_.GAME_ID)) { (gid, evIt, sideIt) =>
-        runGame(gid, evIt, sideIt) match {
-          case Success(rows) => rows.iterator.map(r => (Option(r), Option.empty[GameError]))
+        val marker =
+          if (evIt.hasNext) Iterator((Option.empty[PbpWithPlayers],
+            Option.empty[GameError], Option(gid)))
+          else Iterator.empty
+        marker ++ (runGame(gid, evIt, sideIt) match {
+          case Success(rows) =>
+            rows.iterator.map(r => (Option(r), Option.empty[GameError], Option.empty[String]))
           case Failure(e) =>
             Iterator((Option.empty[PbpWithPlayers],
-              Some(GameError(gid, String.valueOf(e.getMessage)))))
-        }
-      }.persist()
-    (outcomes.flatMap(_._1),
-      outcomes.flatMap(_._2).union(decodeErrors),
-      () => { outcomes.unpersist(); () })
+              Some(GameError(gid, String.valueOf(e.getMessage))), Option.empty[String]))
+        })
+      }
+    val undecodable = badGames.map(g => (Option.empty[PbpWithPlayers],
+      Option(GameError(g,
+        s"undecodable play-by-play: null in one of ${RequiredEventCols.mkString("/")}")),
+      Option(g)))
+    val outcomes = games.union(undecodable).localCheckpoint(true)
+    Tracked(outcomes.flatMap(_._1), outcomes.flatMap(_._2), outcomes.flatMap(_._3),
+      () => Checkpoints.rddsOf(outcomes.toDF()).foreach(_.unpersist(false)))
   }
 
   /** Resumable lineup state — also the streaming operator's GroupState

@@ -94,24 +94,24 @@ object PipelineMain {
 
     val starters = scala.util.Try(tbl("players_on_court_at_start_of_period")).toOption
     val teamLog = scala.util.Try(tbl("team_game_log")).toOption
-    val (rows, errors, release) = Lineups.withPlayersAndErrors(
-      pbp, tbl("rotations"), starters, teamLog)
+    val tracked = Lineups.tracked(pbp, tbl("rotations"), starters, teamLog)
 
-    val newRows = rows.toDF()
+    val newRows = tracked.rows.toDF()
       .withColumn("SEASON", GameIds.extractSeason(col("GAME_ID")))
       .withColumn("SEASON_TYPE", GameIds.extractSeasonType(col("GAME_ID")))
     Publish.idempotent(newRows, outDir, args.delta)
 
     // quarantine channel: drop stale errors of every game processed this
-    // run (delta or not), then add this run's failures
-    val processed = pbp.select(col("GAME_ID")).distinct()
-    val errDf = errors.toDF()
+    // run (delta or not), then add this run's failures — both read from
+    // the tracker's staged outcomes, not from the play-by-play again
+    val processed = tracked.processed.toDF("GAME_ID")
+    val errDf = tracked.errors.toDF()
     scala.util.Try(Warehouse.readTable(spark, errDir)).toOption match {
       case Some(exErr) =>
         Warehouse.replaceDir(
           exErr.join(processed, Seq("GAME_ID"), "left_anti").unionByName(errDf), errDir)
       case None => errDf.write.mode("append").parquet(errDir)
     }
-    release() // both channels are written; free the cached outcomes
+    tracked.release() // both channels are written; free the staged outcomes
   }
 }

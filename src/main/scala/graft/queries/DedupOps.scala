@@ -85,6 +85,20 @@ object DedupOps {
       .filter(size(col("w")) >= NGram)
       .select(col("doc_id"), Shingles.wordNGrams(col("w"), NGram).as("sh"))
 
+  /** `docs` with its [[shingledOf]] array as an extra column `sh`, null
+    * for a doc under the n-gram length (the rows [[shingledOf]] leaves
+    * out). One frame then carries each document beside its shingles, so
+    * a stage can keep both without a doc_id self-join. */
+  private[graft] def withShingles(docs: DataFrame): DataFrame =
+    docs.withColumn("sh", split(col("text"), " "))
+      .withColumn("sh", when(size(col("sh")) >= NGram,
+        Shingles.wordNGrams(col("sh"), NGram)))
+
+  /** The (doc_id, sh) rows of a [[withShingles]] frame — [[shingledOf]]'s
+    * rows for the same documents. */
+  private[graft] def shinglesIn(docs: DataFrame): DataFrame =
+    docs.filter(col("sh").isNotNull).select(col("doc_id"), col("sh"))
+
   /** Exact n-gram Jaccard via inverted-index (posting-list) self-join.
     *
     * `dfMax` is the scale lever: the self-join costs O(Σ df²) over shingle
@@ -146,7 +160,16 @@ object DedupOps {
     * table is 4 rows/doc (tiny next to the posting join upstream), so
     * hashing the key buys nothing measurable while costing parity. */
   def minhashNearDup(shingles: DataFrame,
-      threshold: Double = JaccardThreshold): DataFrame = {
+      threshold: Double = JaccardThreshold): DataFrame =
+    minhashNearDupWithBands(shingles, threshold)._1
+
+  /** [[minhashNearDup]] plus the persisted band table its pairs read, for
+    * a caller that must release that table itself once the pairs are
+    * consumed: an always-on stream gate never calls `clearCache`, so a
+    * band table left behind per micro-batch is a cache entry leaked per
+    * batch. */
+  private[graft] def minhashNearDupWithBands(shingles: DataFrame,
+      threshold: Double = JaccardThreshold): (DataFrame, DataFrame) = {
     val post = shingles.select(col("doc_id"), explode(col("sh")).as("g"))
       .withColumn("t", md5(col("g")))
     val sig = post.groupBy(col("doc_id"))
@@ -174,12 +197,13 @@ object DedupOps {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    cand
+    val pairs = cand
       .join(shingles.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(shingles.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         Shingles.jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
+    (pairs, bands)
   }
 
   /** Per-row MinHash band values: (doc_id, sh, varr) where varr[b] is the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Sessions
 import graft.corpus.{CorpusStreamMain, GateState}
+import graft.ops.Checkpoints
 import graft.queries.DedupOps
 
 /** Measures the streaming gate's cost curve as absorbed state grows — the
@@ -16,8 +17,9 @@ import graft.queries.DedupOps
   * table with every token tagged per batch — so each batch's shingles are
   * globally unique and (almost) every doc is ACCEPTED, which is the
   * worst case for the gate: absorbed state grows by a full batch per
-  * batch. Prints one line per batch (wall time + absorbed rows), then
-  * times the two restart paths against the accumulated history:
+  * batch. Prints one line per batch (wall time, Spark jobs — counted by
+  * [[ProfStages.Recorder]] — and absorbed rows), then times the two
+  * restart paths against the accumulated history:
   *
   *   - resume WITHOUT the at-rest tables: re-reads + re-shingles every
   *     published batch dir — O(all accepted history);
@@ -61,10 +63,14 @@ object ProfGate {
     time("gate startup (build from corpus)")(())
     val state = GateState.build(corpus)
     println(s"[prof-gate] corpus=$corpusCount docs, $batches batches x $batchSize docs")
-    println("[prof-gate] batch\twall_s\tabsorbed_shingle_rows\tabsorbed_index_rows")
+    println("[prof-gate] batch\twall_s\tjobs\tabsorbed_shingle_rows\tabsorbed_index_rows")
+    val sc = spark.sparkContext
+    val rec = new ProfStages.Recorder()
+    sc.addSparkListener(rec)
     (0 until batches).foreach { k =>
       val docs = batchOf(k)
       val ids = docs.select("doc_id")
+      sc.setLocalProperty(rec.tagKey, s"batch-$k")
       val t0 = System.nanoTime()
       val curated = CorpusStreamMain.curateBatch(docs, state.corpusSh,
         corpusIndex = Some(state.probeIdx(ids, k.toLong)))
@@ -72,9 +78,14 @@ object ProfGate {
       state.absorb(k.toLong, spark.read.parquet(s"$out/batch=$k")
         .select("doc_id", "text"))
       val wall = (System.nanoTime() - t0) / 1e9
+      sc.setLocalProperty(rec.tagKey, null)
+      // the batch is published and folded in: release curateBatch's staging
+      Checkpoints.rddsOf(curated).foreach(_.unpersist(false))
+      rec.drain(sc)
       val s = state.absorbedStats()
-      println(f"[prof-gate] $k\t$wall%.2f\t${s.shingleRows}\t${s.indexRows}")
+      println(f"[prof-gate] $k\t$wall%.2f\t${rec.jobsTagged(s"batch-$k")}\t${s.shingleRows}\t${s.indexRows}")
     }
+    sc.removeSparkListener(rec)
     state.close()
 
     // restart path A: no tables — resume re-reads and re-shingles every

@@ -25,6 +25,15 @@ class GameFunctionsSpec extends SparkSpec {
     assert(clockOf((3, "7:30")) == Seq((2 * 720) + (720 - 450)))
   }
 
+  test("secondsFromStart is null, not an ANSI cast failure, for a clock that is not M:SS") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val bad = Seq("", "bad", "7", "1:2:3", "7:xx", ":30", "7:", null)
+    val got = (bad :+ "7:30").map(c => (3, c)).toDF("PERIOD", "PCTIMESTRING")
+      .select(GameClock.secondsFromStart(col("PERIOD"), col("PCTIMESTRING")))
+      .as[Option[Int]].collect().toSeq
+    assert(got == bad.map(_ => None) :+ Some((2 * 720) + (720 - 450)))
+  }
+
   test("secondsFromStart is strictly monotone over the whole clock domain") {
     // every (period, remaining-second) in game order, periods 1..8
     val domain = for {

@@ -1001,4 +1001,113 @@ class CorpusStreamMainSpec extends SparkSpec {
           s"be visible to a fresh estate read; got $lines")
     } finally audit.unpersist()
   }
+
+  // ---- per-batch cost: staging, cache hygiene, job count ----------------
+
+  /** One gate micro-batch `k`: a fresh doc, two in-batch twins and a copy
+    * of a corpus doc — every drop path of curateBatch has work to do. */
+  private def twinBatch(k: Long): DataFrame = Seq(
+      (100L * k + 1, "src0", s"fresh batch $k words that no other document shares at all"),
+      (100L * k + 2, "src1", s"twin body $k arrives twice in the very same micro batch"),
+      (100L * k + 3, "src0", s"twin body $k arrives twice in the very same micro batch"),
+      (100L * k + 4, "src1", corpusRows(1)._3))
+    .toDF("doc_id", "source", "text")
+
+  /** curate -> publish -> absorb of batch `k`, as `start`'s foreachBatch
+    * runs it; returns the published doc ids. */
+  private def gateBatch(state: GateState, out: String, k: Long): Set[Long] = {
+    val b = twinBatch(k)
+    val curated = CorpusStreamMain.curateBatch(b, state.corpusSh,
+      corpusIndex = Some(state.probeIdx(b.select("doc_id"), k)))
+    CorpusStreamMain.publishBatch(curated, out, k)
+    val published = spark.read.parquet(s"$out/batch=$k").select("doc_id", "text")
+    state.absorb(k, published)
+    published.select("doc_id").as[Long].collect().toSet
+  }
+
+  /** Plans in the session's SQL cache (the CacheManager keeps no public
+    * count). */
+  private def cachedPlans(): Int = {
+    val cm = spark.sharedState.cacheManager
+    val f = cm.getClass.getDeclaredFields.find(_.getName.endsWith("cachedData")).get
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[scala.collection.Iterable[_]].size
+  }
+
+  test("gate batches leave the session's SQL cache as they found it") {
+    // an always-on gate never calls clearCache: a cache entry left per
+    // micro-batch (the intra-batch pair pass's band table) piles up for
+    // the stream's lifetime
+    val out = Files.createTempDirectory("stream_gate_cache").toString
+    val state = GateState.build(corpusDf)
+    try {
+      val before = cachedPlans()
+      for (k <- 0L until 3L)
+        assert(gateBatch(state, out, k) == Set(100 * k + 1, 100 * k + 2),
+          s"batch $k: the fresh doc and one twin publish")
+      assert(cachedPlans() == before, "a gate batch left cached plans behind")
+    } finally state.close()
+  }
+
+  test("one gate batch runs a bounded number of Spark jobs") {
+    // the fixed cost of a micro-batch is its job count: the corpus probe
+    // runs once (the survivors are staged for the pair pass and the
+    // publish) and absorb's stats ride its checkpoint jobs
+    val out = Files.createTempDirectory("stream_gate_jobs").toString
+    val state = GateState.build(corpusDf)
+    val sc = spark.sparkContext
+    val rec = new graft.tools.ProfStages.Recorder()
+    sc.addSparkListener(rec)
+    try {
+      gateBatch(state, out, 0L) // warm: first-batch one-offs do not count
+      sc.setLocalProperty(rec.tagKey, "gate-batch")
+      val kept = try gateBatch(state, out, 1L)
+        finally sc.setLocalProperty(rec.tagKey, null)
+      assert(kept == Set(101L, 102L))
+      rec.drain(sc)
+      val jobs = rec.jobsTagged("gate-batch")
+      assert(jobs <= GateBatchJobs, s"one gate batch ran $jobs Spark jobs")
+      assert(state.absorbedStats().batches == 2)
+    } finally {
+      sc.removeSparkListener(rec)
+      state.close()
+    }
+  }
+
+  test("the staging job broadcasts the bench set and plans no cartesian") {
+    // curateBatch returns a frame over its staged survivors, so the bench
+    // join lives in the staging (localCheckpoint) job's plan
+    val corpusSh = DedupOps.shingledOf(corpusDf)
+    val benchSet = DedupOps.benchShingleSet(DedupOps.shingledOf(
+      Seq((9000L, "held out evaluation prompt text here")).toDF("doc_id", "text")))
+    val rows = Seq((30L, "src0", "a document body to curate and publish"))
+      .toDF("doc_id", "source", "text")
+    val plans = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.put(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      noAutoBroadcast {
+        CorpusStreamMain.curateBatch(rows, corpusSh, benchSet = Some(benchSet))
+      }
+      // the staging checkpoint is curateBatch's first; the components
+      // rounds follow it on the same in-order bus
+      val staging = plans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      assert(staging != null, "no localCheckpoint was reported")
+      assert(staging.contains("BroadcastHashJoin"), s"bench join must broadcast:\n$staging")
+      assert(!staging.contains("CartesianProduct"), "cartesian in the gate plan")
+      assert(!staging.contains("BroadcastNestedLoopJoin"), "degenerate join in the gate plan")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Spark jobs one warm gate batch of [[twinBatch]] may run (curate,
+    * publish and absorb, the read-back of the published dir included):
+    * 26 on a 4-core box, where the gate that re-ran the probe for the
+    * pair pass and the publish and counted absorb's rows ran 39. */
+  private val GateBatchJobs = 32
 }

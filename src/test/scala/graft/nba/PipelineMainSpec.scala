@@ -107,6 +107,85 @@ class PipelineMainSpec extends SparkSpec {
       .select("GAME_ID").as[String].collect().toSeq == Seq(G2))
   }
 
+  test("a malformed clock quarantines its game; the other games publish") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline-clock").toString
+    val (in, out) = (s"$dir/in", s"$dir/out")
+    val G1 = "0022400100" // good
+    val G3 = "0022400103" // one event's PCTIMESTRING is not M:SS
+    val T1 = 100L
+    val T2 = 200L
+    def roster(g: String) =
+      ((1L to 5L).map(p => (g, T1, p, Seq(Stint(0.0, 28800.0)))) ++
+        Seq((g, T1, 6L, Seq(Stint(3600.0, 28800.0)))) ++
+        (11L to 15L).map(p => (g, T2, p, Seq(Stint(0.0, 28800.0)))))
+    (roster(G1) ++ roster(G3))
+      .toDF("GAME_ID", "TEAM_ID", "PLAYER_ID", "STINTS")
+      .write.parquet(s"$in/rotations")
+    Seq(
+      (G1, 1L, 10, 0, 1, "12:00", Some(1L), Some(T1), Some(11L), Some(T2)),
+      (G1, 2L, 8, 0, 1, "6:00", Some(1L), Some(T1), Some(6L), Some(T1)),
+      (G3, 1L, 10, 0, 1, "12:00", Some(1L), Some(T1), Some(11L), Some(T2)),
+      (G3, 2L, 8, 0, 1, "bad", Some(1L), Some(T1), Some(6L), Some(T1)))
+      .toDF("GAME_ID", "EVENTNUM", "EVENTMSGTYPE", "EVENTMSGACTIONTYPE", "PERIOD",
+        "PCTIMESTRING", "PLAYER1_ID", "PLAYER1_TEAM_ID", "PLAYER2_ID", "PLAYER2_TEAM_ID")
+      .withColumn("PLAYER3_ID", lit(null).cast("long"))
+      .withColumn("PLAYER3_TEAM_ID", lit(null).cast("long"))
+      .write.parquet(s"$in/play_by_play")
+    val args = PipelineArgs.parse(Seq(
+      "--season", "2024-25", "--season-type", "Regular Season",
+      "--input", in, "--output", out)).toOption.get
+
+    PipelineMain.runWith(spark, args)
+    assert(spark.read.parquet(s"$out/play_by_play_with_players")
+      .select("id").as[String].collect().sorted.toSeq == Seq(s"$G1-1", s"$G1-2"))
+    val errs = spark.read.parquet(s"$out/lineup_errors")
+      .select("GAME_ID", "error").as[(String, String)].collect().toSeq
+    assert(errs.map(_._1) == Seq(G3))
+    assert(errs.head._2.contains("SECONDS_FROM_START"), errs.head._2)
+  }
+
+  test("a delta night heals the quarantine row of a game that now succeeds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline-heal").toString
+    val (in, out) = (s"$dir/in", s"$dir/out")
+    val G1 = "0022400100"
+    val G2 = "0022400101" // fails on the first night, is re-fed fixed
+    val T1 = 100L
+    val T2 = 200L
+    def roster(g: String) =
+      ((1L to 5L).map(p => (g, T1, p, Seq(Stint(0.0, 28800.0)))) ++
+        Seq((g, T1, 6L, Seq(Stint(3600.0, 28800.0)))) ++
+        (11L to 15L).map(p => (g, T2, p, Seq(Stint(0.0, 28800.0)))))
+    (roster(G1) ++ roster(G2))
+      .toDF("GAME_ID", "TEAM_ID", "PLAYER_ID", "STINTS")
+      .write.parquet(s"$in/rotations")
+    def pbp(g2SubOut: Long) = Seq(
+      (G1, 1L, 10, 0, 1, "12:00", Some(1L), Some(T1), Some(11L), Some(T2)),
+      (G1, 2L, 8, 0, 1, "6:00", Some(1L), Some(T1), Some(6L), Some(T1)),
+      (G2, 1L, 10, 0, 1, "12:00", Some(1L), Some(T1), Some(11L), Some(T2)),
+      (G2, 2L, 8, 0, 1, "6:00", Some(g2SubOut), Some(T1), Some(6L), Some(T1)))
+      .toDF("GAME_ID", "EVENTNUM", "EVENTMSGTYPE", "EVENTMSGACTIONTYPE", "PERIOD",
+        "PCTIMESTRING", "PLAYER1_ID", "PLAYER1_TEAM_ID", "PLAYER2_ID", "PLAYER2_TEAM_ID")
+      .withColumn("PLAYER3_ID", lit(null).cast("long"))
+      .withColumn("PLAYER3_TEAM_ID", lit(null).cast("long"))
+    val args = PipelineArgs.parse(Seq(
+      "--season", "2024-25", "--season-type", "Regular Season",
+      "--input", in, "--output", out)).toOption.get
+
+    pbp(999L).write.parquet(s"$in/play_by_play")
+    PipelineMain.runWith(spark, args)
+    assert(spark.read.parquet(s"$out/lineup_errors")
+      .select("GAME_ID").as[String].collect().toSeq == Seq(G2))
+    // the feed is fixed: a delta night processes G2 (not yet published),
+    // publishes it, and drops its stale error row
+    pbp(1L).write.mode("overwrite").parquet(s"$in/play_by_play")
+    PipelineMain.runWith(spark, args.copy(delta = true))
+    assert(spark.read.parquet(s"$out/play_by_play_with_players")
+      .select("id").as[String].collect().sorted.toSeq ==
+      Seq(s"$G1-1", s"$G1-2", s"$G2-1", s"$G2-2"))
+    assert(spark.read.parquet(s"$out/lineup_errors").count() == 0,
+      "G2 succeeded this night: its old error row must be healed")
+  }
+
   test("createDatabase bootstraps once and is idempotent (S8, db_init.py:7-20)") {
     import graft.sources.Warehouse
     val tmp = java.nio.file.Files.createTempDirectory("graft_db").toString

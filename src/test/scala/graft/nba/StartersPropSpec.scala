@@ -34,8 +34,8 @@ class StartersPropSpec extends SparkSpec {
     val box = Seq.newBuilder[BoxRow]
     var eventnum = 0L
     def p(x: Double) = r.nextDouble() < x * noise
-    // a sub event's clock is parsed (an unparsable one fails the cast in
-    // either form), any other event's clock is not
+    // a sub event's clock is parsed (an unparsable one is null in either
+    // form), any other event's clock is not
     def clock(secsLeft: Int, tpe: Int): String =
       if (p(0.04)) {
         val odd = if (tpe == 8) Seq(null, "1:2:3", "11:75") else Seq("bad", "", "7", null)
