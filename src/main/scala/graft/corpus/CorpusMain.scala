@@ -813,37 +813,39 @@ object CorpusMain {
             sh.join(drop, Seq("doc_id"), "left_anti"))
         case None => (docs, sh)
       }
-      val pairs = DedupOps.minhashNearDup(ssh).persist()
+      val (pairs0, bands) = DedupOps.minhashNearDupWithBands(ssh)
+      val pairs = pairs0.persist()
       try {
         // audit first: if the run dies after this publish, the pair
-        // evidence is on disk and a rerun recomputes the same corpus
-        Warehouse.replaceDir(pairs, s"$output/near_dup_pairs")
+        // evidence is on disk and a rerun recomputes the same corpus.
+        // The write materializes the staged pairs, so the band table they
+        // were derived from is released right after it.
+        try Warehouse.replaceDir(pairs, s"$output/near_dup_pairs")
+        finally { bands.unpersist(); () }
         // --keep-best swaps each component's min-id survivor for its
         // best-QUALITY one (q74's rule, ranked by the same scalar the
         // quota ranks by), and publishes the full doc -> canonical map as
         // lineage evidence BEFORE the drop applies — every dropped doc's
         // audit row names the doc that replaced it, so the drop is
         // reversible and explainable like every other stage's
-        def collapse(frame: DataFrame, prs: DataFrame, star: Boolean,
-            audit: String): DataFrame =
-          if (!keepBest) DedupOps.dedupeCorpus(frame, prs, star)
+        def collapse(frame: DataFrame, prs: DataFrame, audit: String): DataFrame =
+          if (!keepBest) DedupOps.dedupeCorpus(frame, prs)
           else {
             Warehouse.replaceDir(
-              DedupOps.canonicalByQuality(frame, prs, TextOps.docQuality, star),
+              DedupOps.canonicalByQuality(frame, prs, TextOps.docQuality),
               s"$output/$audit")
             frame.join(
               spark.read.parquet(s"$output/$audit")
                 .filter(col("is_canonical")).select("doc_id"),
               Seq("doc_id"), "left_semi")
           }
-        val textDeduped = collapse(sdocs, pairs, star = false, "canonical_map")
+        val textDeduped = collapse(sdocs, pairs, "canonical_map")
         // vector pass AFTER the text pass, over its survivors only: the
         // double-dedup a production corpus run actually does. The pair
         // producer is the LSH-bucketed kernel (banded equi-join, never
         // all-pairs — the scale path; the exact kernel stays a
-        // verification tool), and the collapse is large-star/small-star:
-        // cosine similarity CHAINS (a~b~c without a~c), so diameter is
-        // unknown and star cycles converge in O(log d) regardless.
+        // verification tool), and the collapse is the same components
+        // pass as the text one.
         val deduped = embeddings match {
           case Some(embPath) =>
             val n = VectorSim.prepped(spark.read.parquet(embPath))
@@ -862,7 +864,7 @@ object CorpusMain {
               // lands before any drop it justifies
               Warehouse.replaceDir(vpairs, s"$output/embed_dup_pairs")
               collapse(textDeduped, vpairs.select("doc_a", "doc_b"),
-                star = true, "embed_canonical_map")
+                "embed_canonical_map")
             } finally { vpairs.unpersist(); () }
           case None =>
             // (the stale vector audit, if any, is retired post-publish)
@@ -1088,12 +1090,13 @@ object CorpusMain {
             // per-(split_a, split_b) summary derived from the PUBLISHED
             // pair evidence (evidence-then-read-back, like every audit).
             auditSplits.foreach { t =>
-              Warehouse.replaceDir(
-                DedupOps.crossSplitPairs(DedupOps.minhashNearDup(pubSh, t),
-                    splitCuts._1, splitCuts._2)
+              val (leaks, leakBands) = DedupOps.minhashNearDupWithBands(pubSh, t)
+              try Warehouse.replaceDir(
+                DedupOps.crossSplitPairs(leaks, splitCuts._1, splitCuts._2)
                   .select(col("doc_a"), col("doc_b"), col("split_a"),
                     col("split_b"), col("jaccard")),
                 s"$output/split_leakage")
+              finally { leakBands.unpersist(); () }
               publishSplitReport(spark, output)
             }
           } finally { pubSh.unpersist(); () }

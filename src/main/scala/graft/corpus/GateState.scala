@@ -112,11 +112,11 @@ final class GateState private (
     * threshold) a corpus or previously-accepted vector
     * ([[VectorOps.lshNearDupAgainstIndex]]), then collapse intra-batch
     * vector near-dup clusters to one canonical ([[VectorOps.lshNearDup]]
-    * + star components — cosine similarity chains, so diameter is
-    * unknown). Docs with no row in the vectors table pass untouched: an
-    * embedding-less doc has nothing to compare. Identity when no vector
-    * side is configured. Replay identity mirrors [[probeIdx]]: only a
-    * replayed batch excludes its own ids, from base AND absorbed. */
+    * + [[DedupOps.dedupeCorpus]]). Docs with no row in the vectors table
+    * pass untouched: an embedding-less doc has nothing to compare.
+    * Identity when no vector side is configured. Replay identity mirrors
+    * [[probeIdx]]: only a replayed batch excludes its own ids, from base
+    * AND absorbed. */
   def vectorGate(curated: DataFrame, batchIds: DataFrame,
       batchId: Long): DataFrame =
     vecSide match {
@@ -137,7 +137,7 @@ final class GateState private (
           flagged.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_anti")
         val pairs = VectorOps.lshNearDup(survVecs, threshold)
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-        DedupOps.dedupeCorpus(survived, pairs, star = true)
+        DedupOps.dedupeCorpus(survived, pairs)
     }
 
   /** Fold one published batch's accepted docs into the absorbed

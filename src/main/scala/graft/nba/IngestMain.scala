@@ -84,6 +84,6 @@ object IngestMain {
       case "team_game_log" => Etl.teamGameLog(in)
       case "shot_details" => Etl.shotDetails(in)
     }
-    Publish.idempotent(enriched, outDir, args.delta)
+    Publish.idempotent(enriched, outDir, args.delta, deltaKeys)
   }
 }

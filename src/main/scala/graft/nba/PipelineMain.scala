@@ -57,9 +57,9 @@ object PipelineArgs {
   *
   * Idempotence (reference: `INSERT ... ON CONFLICT (id) DO UPDATE`,
   * database/db_client.py:69-92): a non-delta rerun REPLACES what it
-  * recomputes instead of appending duplicates — existing rows of the
-  * affected partitions are merged with the new rows via Upsert.replace on
-  * id, and only the affected (SEASON, SEASON_TYPE) partitions are swapped
+  * recomputes instead of appending duplicates — every existing row of a
+  * recomputed game is replaced by the game's new rows (Publish.idempotent),
+  * and only the affected (SEASON, SEASON_TYPE) partitions are swapped
   * (Warehouse.overwritePartitions); other seasons are untouched. The
   * quarantine table heals the same way: errors of the games processed this
   * run are replaced, so a game that fails twice has one error row and a

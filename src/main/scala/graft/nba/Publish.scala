@@ -10,9 +10,13 @@ import graft.sources.Warehouse
   *
   *   - delta mode: the rows are by construction absent from the target,
   *     so they plain-append (one write, no read of the target);
-  *   - full mode: existing rows of the partitions this run recomputes are
-  *     merged with the new rows (Upsert.replace on `key` — incoming wins),
-  *     then exactly those partitions are swapped via write-audit-publish
+  *   - full mode: the run recomputes whole units (a game, or a
+  *     shot-chart fetch combo), so every existing row of a unit present in
+  *     the new rows is replaced by that unit's new rows — a row the
+  *     recompute no longer produces (a player gone from a re-fetched
+  *     rotation) is deleted, not kept. Incoming rows are deduped by `id`
+  *     (Upsert.replace, incoming wins). Exactly the partitions holding
+  *     those units are swapped via write-audit-publish
   *     (Warehouse.overwritePartitions); the rest of the warehouse is
   *     never read or touched.
   */
@@ -50,8 +54,13 @@ object Publish {
       case None => scoped
     }
 
+  /** Publish `newRows` into `outDir`. `unit` names the columns of the unit
+    * a run recomputes — the keys the caller passes to [[deltaOnly]], a
+    * game for every table but shot_details: in full mode the existing
+    * rows of every unit present in `newRows` are dropped before the
+    * merge. */
   def idempotent(newRows: DataFrame, outDir: String, delta: Boolean,
-      key: String = "id")(implicit spark: SparkSession): Unit = {
+      unit: Seq[String] = Seq("GAME_ID"))(implicit spark: SparkSession): Unit = {
     // heal interrupted swaps before ANY read of the target: a partition
     // stranded in its .old sibling is invisible to the merge read below,
     // and publishing a merge that missed it would drop its rows for good
@@ -63,10 +72,13 @@ object Publish {
       val merged = scala.util.Try(Warehouse.readTable(spark, outDir)).toOption match {
         case Some(ex) =>
           // merge only the partitions this run recomputes; the semi-join on
-          // the partition columns prunes the rest of the warehouse
+          // the partition columns prunes the rest of the warehouse, and the
+          // anti-join on the unit keys retires every recomputed unit's rows
           val parts = newRows.select(Warehouse.PartitionCols.map(col): _*).distinct()
-          val affected = ex.join(broadcast(parts), Warehouse.PartitionCols, "left_semi")
-          Upsert.replace(affected, newRows, key)
+          val units = newRows.select(unit.map(col): _*).distinct()
+          val kept = ex.join(broadcast(parts), Warehouse.PartitionCols, "left_semi")
+            .join(units, unit, "left_anti")
+          Upsert.replace(kept, newRows, "id")
         case None => newRows
       }
       Warehouse.overwritePartitions(merged, outDir)

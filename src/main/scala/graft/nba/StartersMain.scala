@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * dirty).
   *
   * Delta mode (:167-183): only games absent from the output table are
-  * derived, then plain-appended. Non-delta reruns merge-and-swap the
-  * affected partitions (Upsert.replace + overwritePartitions), like the
+  * derived, then plain-appended. Non-delta reruns replace the recomputed
+  * games' rows and swap the affected partitions (Publish.idempotent), like the
   * flagship PipelineMain.
   */
 object StartersMain {

@@ -385,55 +385,73 @@ object DedupOps {
     * minimum doc_id reachable through the pair graph — what turns any of
     * the pair-producing passes above into an actual corpus dedup. Labels
     * converge by iterative min-propagation, the standard no-GraphX
-    * connected-components shape at corpus scale.
+    * connected-components shape at corpus scale. Only docs that appear in
+    * a pair are returned.
     *
-    * Cost model: ONE Spark job per round — the round's `count` action both
-    * materializes the persisted propagation result and yields the
-    * convergence signal (labels only ever decrease, so `label < old` counts
-    * exactly the docs that moved; zero moved = converged). Rounds needed =
-    * component diameter, counting the final detect round (the first
-    * propagation hop is fused into the init) — for near-dup clusters,
-    * single digits; the
-    * default budget of 50 covers any plausible corpus (a 50-hop near-dup
-    * chain means the threshold, not the algorithm, is wrong). A graph that
-    * genuinely exceeds the budget fails loudly rather than returning
-    * silently-unmerged labels; raise `maxIter`, or set
-    * `pointerJumping = true` to add a label-of-label hop each round —
-    * distance-to-root better-than-halves per round, so rounds drop from
-    * O(diameter) to O(log diameter) at the price of one extra labels
-    * self-join per round (worth it for deep graphs, overhead for the
-    * shallow near-dup clusters this suite produces; DedupVolumeSpec pins
-    * both round counts). Only docs that appear in a pair are returned.
+    * Cost model: ONE driver action per round — the round's eager
+    * `localCheckpoint` materializes the propagation result, and an
+    * Observation on that same action yields the convergence signal
+    * (labels only ever decrease, so `label < old` counts exactly the docs
+    * that moved; zero moved = converged). Rounds = component diameter,
+    * counting the final detect round (the first propagation hop is fused
+    * into the init). AQE runs a round's stages as about 3.4 jobs, and at
+    * near-dup graph sizes their fixed per-stage cost, not the pair count,
+    * sets what a round costs.
+    *
+    * No round budget: every round that does not stop lowers at least one
+    * label, and labels are bounded below by the component minimum, so the
+    * loop ends within diameter + 1 rounds on any input — it cannot stop
+    * early with unmerged labels.
+    *
+    * One algorithm: large-star/small-star (Kiveris et al., SoCC'14) and a
+    * pointer-jumping variant of this loop were measured against it on
+    * every graph a query or main builds (sf0.1, `local[4]`, one call on a
+    * checkpointed pair set, medians [q1, q3]):
+    *
+    *   - text near-dups (q38/q39/q74/q81, 256 pairs): 0.28 s [0.26, 0.34]
+    *     in 1 round; star 0.72 s [0.61, 0.79] in 2 cycles (this loop won
+    *     12/12 pairs); pointer jumping 0.49 s;
+    *   - q53 cosine graph (920 pairs, diameter 16): 1.99 s [1.94, 2.46] in
+    *     16 rounds; star 1.94 s [1.71, 2.26] in 6 cycles (star faster in
+    *     10/12 pairs, by less than the spread); pointer jumping 2.64 s in
+    *     12 rounds;
+    *   - q109 LSH graph (451 pairs): 1.17 s [1.08, 1.36] in 8 rounds; star
+    *     1.22 s [1.09, 1.31] in 4 cycles (star faster in 8/12 pairs);
+    *   - a synthetic 64-chain: 5.6 s in 64 rounds; star 1.8 s in 7 cycles.
+    *
+    * A star cycle runs about 5.6 jobs against 3.4 for a round here, so its
+    * fewer rounds only pay on graphs far deeper than any workload builds
+    * (the deepest measured is 16). End to end (10 alternating pairs, same
+    * setup), q53 runs 0.26 s (10%) slower than it did on star, about the
+    * spread of its runs; q109 and q39 run within theirs.
     *
     * Fault-tolerance note: per-round localCheckpoint trades lineage for
     * speed — an executor loss mid-computation fails the job (Spark's
     * documented local-checkpoint caveat) and the caller reruns it; for a
     * multi-hour corpus pass on preemptible nodes, swap in reliable
     * `checkpoint()` with a checkpoint dir — same shape, durable rounds. */
-  def components(pairs: DataFrame, maxIter: Int = 50,
-      pointerJumping: Boolean = false): DataFrame =
-    componentsWithRounds(pairs, maxIter, pointerJumping)._1
+  def components(pairs: DataFrame): DataFrame = componentsWithRounds(pairs)._1
 
   /** [[components]] plus the number of propagation rounds executed —
-    * package-visible so the volume spec can pin rounds = diameter (plain)
-    * and ~log2(diameter) (pointer jumping). */
-  private[graft] def componentsWithRounds(pairs: DataFrame,
-      maxIter: Int = 50, pointerJumping: Boolean = false): (DataFrame, Int) = {
-    // stage the pair set before mirroring it: the union's two branches
-    // would otherwise each recompute the full upstream pair-producing
-    // pipeline (minhash/simhash/jaccard) inside the first round's job
-    val p = pairs.select(col("doc_a"), col("doc_b")).persist()
+    * package-visible so the volume spec can pin rounds = diameter. */
+  private[graft] def componentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
     // The static edge table is hash-partitioned by src ONCE and cached
     // that way: every round's propagation join and the init groupBy both
     // key on src, so the (big, unchanging) edge side never re-shuffles —
-    // only the (smaller) label table moves per round. No distinct: min-
-    // propagation is duplicate-insensitive (min over repeated values), and
-    // every pair producer in this library already emits distinct pairs —
-    // a caller with heavily duplicated pair rows should dedup upstream,
-    // where it's one combinable aggregation, not pay a mirror-side shuffle
-    // on every clean input here.
-    val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    // only the (smaller) label table moves per round. Each pair is mirrored
+    // by an explode over ONE scan of the pair set: a union of two scans
+    // runs the upstream pair producer twice inside the first round's job
+    // (even over a persisted pair set, whose cache is not yet filled then).
+    // No distinct: min-propagation is duplicate-insensitive (min over
+    // repeated values), and every pair producer in this library already
+    // emits distinct pairs — a caller with heavily duplicated pair rows
+    // should dedup upstream, where it's one combinable aggregation, not pay
+    // a mirror-side shuffle on every clean input here.
+    val edges = pairs
+      .select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("src")).persist()
     // seed with the first propagation hop fused into init: label0 =
     // min(self, direct neighbors) — edges is already partitioned by src,
@@ -451,7 +469,7 @@ object DedupOps {
     var changed = 1L
     var ok = false
     try {
-      while (changed > 0 && iter < maxIter) {
+      while (changed > 0) {
         // Two shuffles per round, labels-side only: the neighbor branch
         // joins labels to the src-partitioned edge cache (labels shuffles,
         // edges doesn't), the self branch rides for free carrying the old
@@ -459,32 +477,22 @@ object DedupOps {
         // {old, neighbors} == least(old, min(neighbors)), and every
         // doc_id has exactly one self row, so max(old) recovers the old
         // label for the convergence signal.
-        val nullOld = lit(null).cast(labels.schema("label").dataType).as("old")
         val viaNeighbors = edges
           .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
-          .select(col("dst").as("doc_id"), col("label"), nullOld)
-        // pointer jumping: also propose label(label(x)) — label(x) is a
-        // reachable node by induction, so its label is too (transitivity
-        // keeps the invariant); each round the distance to the component
-        // minimum better-than-halves
-        val viaHop =
-          if (!pointerJumping) None
-          else Some(labels.as("l1")
-            .join(labels.as("l2"), col("l1.label") === col("l2.doc_id"))
-            .select(col("l1.doc_id").as("doc_id"), col("l2.label").as("label"),
-              nullOld))
+          .select(col("dst").as("doc_id"), col("label"),
+            lit(null).cast(labels.schema("label").dataType).as("old"))
         // ONE job per round: localCheckpoint(eager) materializes the round
         // AND truncates lineage (a persist would keep stacking the
         // iterative plan — analysis cost grows per round and a ~30-round
         // chain overflows the tree-string stack), while the Observation
-        // rides the same job to deliver the convergence signal (labels
-        // only ever decrease, so `label < old` counts exactly the moves) —
-        // no second join + isEmpty probe, no extra action at all
+        // rides the same job to deliver the convergence signal — no second
+        // join + isEmpty probe, no extra action at all. The observed node
+        // sits under a projection only, so on a pair-free input it reports
+        // a count of 0 rather than being pruned with an empty subtree.
         val obs = org.apache.spark.sql.Observation()
-        val next = viaHop.foldLeft(
-            labels
-              .select(col("doc_id"), col("label"), col("label").as("old"))
-              .unionByName(viaNeighbors))(_ unionByName _)
+        val next = labels
+          .select(col("doc_id"), col("label"), col("label").as("old"))
+          .unionByName(viaNeighbors)
           .groupBy(col("doc_id"))
           .agg(min(col("label")).as("label"), max(col("old")).as("old"))
           .observe(obs, count(when(col("label") < col("old"), true)).as("changed"))
@@ -500,7 +508,6 @@ object DedupOps {
         labels = next
         iter += 1
       }
-      require(changed == 0, s"components did not converge within $maxIter rounds")
       ok = true
       (labels, iter)
     } finally {
@@ -508,134 +515,7 @@ object DedupOps {
       // the returned checkpoint (ContextCleaner reaps it when dropped)
       if (!ok) prevRdds.foreach(_.unpersist(false))
       edges.unpersist()
-      p.unpersist()
       ()
-    }
-  }
-
-  /** Connected components by alternating large-star / small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the published deep-graph alternative to [[components]]'
-    * min-label propagation. Each large-star links every neighbor LARGER
-    * than a node to the minimum of its neighborhood; each small-star links
-    * the node and its smaller neighbors there; alternation provably
-    * converges to one star per component, rooted at the component minimum,
-    * in O(log^2 n) rounds (≈ log n in practice) REGARDLESS of diameter.
-    *
-    * When to prefer which: [[components]] keeps the edge set static
-    * (partitioned + cached once; only the small label table moves) and
-    * needs diameter rounds of ONE job each — unbeatable for near-dup
-    * cliques (diameter 1-2). This rewrites the edge set every round (a
-    * distinct + two aggregations, still ONE job per cycle: the exact
-    * convergence test is an Observation riding the checkpoint job)
-    * but the round count ignores diameter and the edge set SHRINKS
-    * toward one edge per node — the right trade for chained similarity
-    * graphs (the q53 cosine graph measured diameter 16) and for any graph
-    * whose diameter is unknown upfront. Returns (doc_id, label) for every
-    * doc appearing in a pair — identical output to [[components]]
-    * (DedupVolumeSpec pins equality on clique, chain, and braided graphs),
-    * except that a degenerate SELF-pair (doc_a == doc_b, which no producer
-    * in this library emits) is dropped here and labeled with itself
-    * there. */
-  def componentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame =
-    componentsStarWithRounds(pairs, maxIter)._1
-
-  /** [[componentsStar]] plus the number of large+small cycles executed. */
-  private[graft] def componentsStarWithRounds(pairs: DataFrame,
-      maxIter: Int = 50): (DataFrame, Int) = {
-    // canonical undirected edges: lo < hi, distinct (self-pairs dropped)
-    var edges = pairs.select(
-        least(col("doc_a"), col("doc_b")).as("lo"),
-        greatest(col("doc_a"), col("doc_b")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct()
-      .localCheckpoint(true)
-    var prevRdds = graft.ops.Checkpoints.rddsOf(edges)
-    var iter = 0
-    var done = false
-    try {
-      while (!done && iter < maxIter) {
-        // large-star: m(u) = min(u, N(u)); every v in N(u) with v > u
-        // relinks to m(u). m < v always holds, so (m, v) is canonical.
-        // The v > u half of sym is the canonical edge set itself, so the
-        // join drives off `edges` directly (one fewer union branch).
-        val sym = edges.select(col("lo").as("u"), col("hi").as("v"))
-          .unionByName(edges.select(col("hi").as("u"), col("lo").as("v")))
-        val mL = sym.groupBy(col("u")).agg(min(col("v")).as("nm"))
-          .select(col("u"), least(col("u"), col("nm")).as("m"))
-        // Convergence (r21): both star passes count their RELINKS as
-        // Observations riding the one checkpoint job — zero relinks in
-        // both passes means each pass was the identity, so next == edges
-        // exactly. This replaces the old membership test (a per-cycle
-        // left join of next against the old edge set plus a row-count
-        // compare) — one full join and its exchanges gone per cycle.
-        // Equivalence is provable, not heuristic: each pass maps every
-        // edge endpoint to a value <= itself, and a finite set mapped
-        // onto itself by a pointwise-<= function is fixed pointwise, so
-        // set-stability forces zero relinks — the two criteria stop on
-        // the SAME cycle (DedupVolumeSpec pins the cycle counts).
-        val obsL = org.apache.spark.sql.Observation()
-        val obsS = org.apache.spark.sql.Observation()
-        val large = edges.select(col("lo").as("u"), col("hi").as("v"))
-          .join(mL, "u")
-          .observe(obsL, count(when(col("m") =!= col("u"), true)).as("relinked"))
-          .select(col("m").as("lo"), col("v").as("hi"))
-        // No distinct here (r21): mS's min and the final distinct are
-        // duplicate-insensitive, and the relink observations only test
-        // zero-ness — collapsing large early bought nothing but one more
-        // exchange per cycle.
-        // small-star keyed at the larger endpoint: m = min of the smaller
-        // neighbors (always < hi); the node and its other small neighbors
-        // relink to m
-        val mS = large.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-        // No distinct on the cycle output (r22): min-aggregation and the
-        // relink observations are duplicate-insensitive (min over a
-        // multiset equals min over its set; zero relinks on copies ⟺
-        // zero on the set), the underlying edge SET evolves identically
-        // cycle-for-cycle, and the final labeling below already dedups —
-        // so the per-cycle distinct bought exact nothing but one full
-        // edge-set exchange + materialization per cycle (guide §2.4:
-        // a distinct on data whose consumers are duplicate-insensitive).
-        // Duplicate growth is bounded: each cycle adds at most one mS row
-        // per hi-node, so the multiset stays O(|edges| + cycles·|nodes|).
-        // The stop cycle is unchanged (DedupVolumeSpec pins the counts).
-        val next = large.join(mS, "hi")
-          .observe(obsS, count(when(col("lo") =!= col("m"), true)).as("relinked"))
-          .filter(col("lo") =!= col("m"))
-          .select(col("m").as("lo"), col("lo").as("hi"))
-          .unionByName(mS.select(col("m").as("lo"), col("hi")))
-          .localCheckpoint(true)
-        // An ABSENT metric means AQE's runtime empty-relation propagation
-        // replaced the observed subtree (mid-plan CollectMetrics nodes
-        // are pruned with it): provably zero rows, hence zero relinks —
-        // the converged-empty-graph case (dedupeCorpus over a pair-free
-        // batch hits this on its first cycle).
-        def relinks(o: org.apache.spark.sql.Observation): Long =
-          o.get.get("relinked") match {
-            case Some(n) => n.asInstanceOf[Long]
-            case None =>
-              // r22 (ADVICE): make the pruned-metric fallback visible —
-              // today its only cause is the provably-zero-rows case
-              // above, but a future cause would otherwise silently
-              // declare convergence with under-merged components.
-              System.err.println(
-                "[componentsStar] 'relinked' metric absent (AQE " +
-                  "empty-relation pruning): treating as 0 relinks")
-              0L
-          }
-        done = relinks(obsL) == 0L && relinks(obsS) == 0L
-        prevRdds.foreach(_.unpersist(false))
-        prevRdds = graft.ops.Checkpoints.rddsOf(next)
-        edges = next
-        iter += 1
-      }
-      require(done, s"componentsStar did not converge within $maxIter cycles")
-      edges.select(col("hi").as("doc_id"), col("lo").as("label"))
-        .unionByName(
-          edges.select(col("lo").as("doc_id"), col("lo").as("label")))
-        .distinct() -> iter
-    } catch { case t: Throwable =>
-      prevRdds.foreach(_.unpersist(false))
-      throw t
     }
   }
 
@@ -739,14 +619,9 @@ object DedupOps {
   /** The full corpus-dedup operator: given documents and near-dup pairs
     * (from minhashNearDup / simhashNearDup / ngramJaccard), keep one
     * canonical document per component — the min doc_id, like the exact
-    * pass's min(doc_id) canonical — and every untouched document.
-    * `star = true` collapses via [[componentsStar]] instead of min-label
-    * propagation — same survivors; pick it for chained pair graphs
-    * (embedding similarity) or unknown diameter. */
-  def dedupeCorpus(docs: DataFrame, pairs: DataFrame,
-      star: Boolean = false): DataFrame = {
-    val labels = if (star) componentsStar(pairs) else components(pairs)
-    val drop = labels
+    * pass's min(doc_id) canonical — and every untouched document. */
+  def dedupeCorpus(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val drop = components(pairs)
       .filter(col("doc_id") =!= col("label"))
       .select(col("doc_id"))
     docs.join(drop, Seq("doc_id"), "left_anti")
@@ -763,16 +638,16 @@ object DedupOps {
     * so the pick can never rank by a different quality than the filter
     * pipeline measures.
     *
-    * Shape at scale: the component labels come from the existing
-    * O(log)-cycle machinery; the argmax is a min(struct) aggregation at
-    * COMPONENT granularity (map-side combinable — no window, no per-group
-    * buffering); the survivor joins back ride the labels frame, which
-    * holds only pair participants — at real-world dup rates a few percent
+    * Shape at scale: the component labels come from [[components]]; the
+    * argmax is a min(struct) aggregation at COMPONENT granularity
+    * (map-side combinable — no window, no per-group buffering); the
+    * survivor joins back ride the labels frame, which holds only pair
+    * participants — at real-world dup rates a few percent
     * of the corpus — so the full corpus is touched once by the final
     * doc_id equi-join and never re-shuffles for the pick itself. */
-  def canonicalByQuality(docs: DataFrame, pairs: DataFrame, quality: Column,
-      star: Boolean = false): DataFrame = {
-    val labels = if (star) componentsStar(pairs) else components(pairs)
+  def canonicalByQuality(docs: DataFrame, pairs: DataFrame,
+      quality: Column): DataFrame = {
+    val labels = components(pairs)
     // quality is computed AFTER the join restricts docs to pair
     // participants (r22): projecting it below the join evaluated the
     // quality expression over EVERY corpus document only to drop all
@@ -806,13 +681,12 @@ object DedupOps {
     * docs that appear in a pair have components, so sizes start at 2 —
     * singletons are the corpus minus the histogram's mass.
     *
-    * Shape at scale: rides the existing O(log)-cycle component machinery;
-    * both aggregations are map-side-combinable and shrink monotonically
-    * (docs -> components -> distinct sizes), so the histogram itself is
-    * never more than distinct-size rows. */
-  def dupStats(pairs: DataFrame, star: Boolean = false): DataFrame = {
-    val labels = if (star) componentsStar(pairs) else components(pairs)
-    labels.groupBy(col("label")).agg(count(lit(1)).as("component_size"))
+    * Shape at scale: rides [[components]]; both aggregations are
+    * map-side-combinable and shrink monotonically (docs -> components ->
+    * distinct sizes), so the histogram itself is never more than
+    * distinct-size rows. */
+  def dupStats(pairs: DataFrame): DataFrame = {
+    components(pairs).groupBy(col("label")).agg(count(lit(1)).as("component_size"))
       .groupBy(col("component_size"))
       .agg(count(lit(1)).as("n_components"))
   }

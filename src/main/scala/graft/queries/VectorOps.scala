@@ -174,27 +174,23 @@ object VectorOps {
     // Embedding-space corpus dedup: the q34 pair set collapsed into
     // connected components — the vector-side capstone mirroring q38's
     // text-side one, composed from oracle-tested pieces (exact cosine
-    // pairs -> DedupOps.componentsStar). At production scale the pair
+    // pairs -> DedupOps.components). At production scale the pair
     // producer swaps to the LSH/IVF-bucketed kernel; the component
-    // collapse is identical. Unlike text near-dups
-    // (tight cliques, diameter 1-2, where label propagation's static-edge
-    // one-job rounds win), cosine similarity CHAINS — a is near b is near
-    // c without a near c — and this graph measured diameter 16 at sf0.1:
-    // the large-star/small-star alternation collapses it in 6 cycles
-    // regardless of diameter (profiled: 16 label-prop rounds / 12 with
-    // pointer jumping / 6 star cycles), the right strategy when diameter
-    // is unknown or deep.
+    // collapse is identical. Cosine similarity chains (a near b near c
+    // without a near c), so this graph is deeper than text near-dups
+    // (diameter 16 at sf0.1): 16 label rounds, where large-star/small-star
+    // took 6 costlier cycles and ran this query about 10% faster.
     "q53_embed_dedup" -> { (s, dir) =>
       val pairs = exactNearDup(vecs(s, dir), NearDupThreshold, allPairsBlocks(s))(s)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      DedupOps.componentsStar(pairs)
+      DedupOps.components(pairs)
         .select(col("doc_id").as("vec_id"), col("label"))
     },
 
     // q53's 100x-SCALE plan as its own timed + oracled query: the pair
     // producer is the hyperplane-LSH banded equi-join (q37's — cost =
-    // candidates, never all-pairs) feeding the same large-star/small-star
-    // collapse. q53 times the EXACT all-pairs kernel as its documented
+    // candidates, never all-pairs) feeding the same component collapse.
+    // q53 times the EXACT all-pairs kernel as its documented
     // oracle-mirrorable stand-in; this entry times the plan CorpusMain
     // actually ships at 100 TB, so the bench now measures the scale
     // story's real shape. Its components cover the LSH pair set (recall
@@ -204,7 +200,7 @@ object VectorOps {
     "q109_embed_dedup_lsh" -> { (s, dir) =>
       val pairs = lshNearDup(stagedVecs(s, dir), NearDupThreshold)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      DedupOps.componentsStar(pairs)
+      DedupOps.components(pairs)
         .select(col("doc_id").as("vec_id"), col("label"))
     },
 
@@ -970,8 +966,8 @@ object VectorOps {
 
   /** The q109 oracle: q37's banded candidate + exact-verify CTEs feeding
     * q53's recursive component collapse — the SQL mirror of the plan the
-    * 100 TB deployment ships (LSH-bucketed pair producer, star
-    * components), sharing the candidate universe with [[lshNearDup]] by
+    * 100 TB deployment ships (LSH-bucketed pair producer, label
+    * propagation), sharing the candidate universe with [[lshNearDup]] by
     * construction. */
   private lazy val lshComponentsOracle: String =
     s"""${vecCte.replaceFirst("WITH ", "WITH RECURSIVE ")},

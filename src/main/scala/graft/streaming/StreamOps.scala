@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.schema.{PbpEvent, PbpWithPlayers}
 import graft.nba.{GameSide, Lineups}
 
@@ -22,7 +21,7 @@ import graft.nba.{GameSide, Lineups}
   * Every stateful tracker here persists its state case class into the
   * checkpoint through its Spark `Encoder` ([[FunnelState]],
   * [[CounterState]], [[ModeState]], [[TopKState]], [[BurstState]],
-  * [[QuantileState]], [[AnomalyState]], and the lineup trackers' roster
+  * [[QuantileState]], [[AnomalyState]], and the lineup tracker's roster
   * map), and Spark's state store offers NO schema evolution for
   * flatMapGroupsWithState state: the serialized shape is the FIELD
   * NAMES, TYPES, AND ORDER of the class at write time. A redeploy that
@@ -547,7 +546,7 @@ object StreamOps {
 
   /** The per-game roster/starters/matchup side inputs as STREAMING initial
     * state: one [[Lineups.LineupState]] per game, carrying only the side
-    * rows. This is how the static side of the join reaches the trackers at
+    * rows. This is how the static side of the join reaches the tracker at
     * scale — the roster table is a distributed Dataset end to end (grouped,
     * shuffled and stored alongside the stream state), never a driver-held
     * map or broadcast. */
@@ -596,51 +595,5 @@ object StreamOps {
             rows.iterator
           }
         })
-  }
-
-  /** The lineup tracker on the arbitrary-state API that supersedes
-    * flatMapGroupsWithState in Spark 4 (`transformWithState` +
-    * StatefulProcessor): same engine (Lineups.advance), state in a typed
-    * ValueState, roster via `handleInitialState` (the
-    * StatefulProcessorWithInitialState hook). Requires the RocksDB state
-    * store provider (spark.sql.streaming.stateStore.providerClass) — which
-    * is also what a 100 TB deployment runs, for state larger than executor
-    * heap and incremental checkpointing. The two variants must stay
-    * behaviorally identical; StreamOpsSpec drives both through the same
-    * scenario. */
-  class LineupProcessor
-      extends StatefulProcessorWithInitialState[
-        String, PbpEvent, PbpWithPlayers, Lineups.LineupState] {
-    @transient private var state:
-      org.apache.spark.sql.streaming.ValueState[Lineups.LineupState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState(
-        "lineup", Encoders.product[Lineups.LineupState], TTLConfig.NONE)
-
-    override def handleInitialState(gid: String,
-        initialState: Lineups.LineupState, timerValues: TimerValues): Unit =
-      state.update(initialState)
-
-    override def handleInputRows(gid: String, rows: Iterator[PbpEvent],
-        timerValues: TimerValues): Iterator[PbpWithPlayers] = {
-      val prior = if (state.exists()) Some(state.get()) else None
-      val side = prior.map(_.side.toArray).getOrElse(Array.empty[GameSide])
-      val batch = rows.toArray.sortBy(e => (e.PERIOD, e.SECONDS_FROM_START, e.EVENTNUM))
-      val (out, next) = Lineups.advance(gid, batch, side, prior)
-      state.update(next)
-      out.iterator
-    }
-  }
-
-  def trackLineupsTws(
-      events: Dataset[PbpEvent],
-      roster: Dataset[GameSide])(
-      implicit spark: SparkSession): Dataset[PbpWithPlayers] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.GAME_ID)
-      .transformWithState(new LineupProcessor,
-        TimeMode.None(), OutputMode.Append(), rosterState(roster))
   }
 }

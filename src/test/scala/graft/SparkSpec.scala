@@ -25,6 +25,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val saved = spark.conf.get(t)
     try { spark.conf.set(t, "-1"); body } finally spark.conf.set(t, saved)
   }
+
+  /** Plans in the session's SQL cache (the CacheManager keeps no public
+    * count). */
+  protected def cachedPlans(): Int = {
+    val cm = spark.sharedState.cacheManager
+    val f = cm.getClass.getDeclaredFields.find(_.getName.endsWith("cachedData")).get
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[scala.collection.Iterable[_]].size
+  }
 }
 
 object SparkSpec {

@@ -1049,6 +1049,16 @@ class CorpusMainSpec extends SparkSpec {
       .as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
+  test("runWith with --audit-splits leaves the session's SQL cache as it found it") {
+    // both minhash passes (the dedup pairs and the split audit) persist a
+    // band table; a library caller never clears the cache, so each run
+    // would otherwise leave them behind
+    val out = Files.createTempDirectory("corpus_main_cache").toString
+    val before = cachedPlans()
+    CorpusMain.runWith(spark, input, out, auditSplits = Some(0.5))
+    assert(cachedPlans() == before, "runWith left cached plans behind")
+  }
+
   test("--audit-splits publishes the cross-split near-dup evidence + report; purge re-derives") {
     import spark.implicits._
     val tmpIn = Files.createTempDirectory("corpus_auditsplit_in").toString

@@ -1025,15 +1025,6 @@ class CorpusStreamMainSpec extends SparkSpec {
     published.select("doc_id").as[Long].collect().toSet
   }
 
-  /** Plans in the session's SQL cache (the CacheManager keeps no public
-    * count). */
-  private def cachedPlans(): Int = {
-    val cm = spark.sharedState.cacheManager
-    val f = cm.getClass.getDeclaredFields.find(_.getName.endsWith("cachedData")).get
-    f.setAccessible(true)
-    f.get(cm).asInstanceOf[scala.collection.Iterable[_]].size
-  }
-
   test("gate batches leave the session's SQL cache as they found it") {
     // an always-on gate never calls clearCache: a cache entry left per
     // micro-batch (the intra-batch pair pass's band table) piles up for

@@ -55,6 +55,27 @@ class IngestMainSpec extends SparkSpec {
     assert(p7 == Seq((0.0, 5720.0), (8510.0, 9000.0)), "stints must sort ascending")
   }
 
+  test("rotations: a full rerun replaces a re-fetched game's rows, stale players included") {
+    val root = Files.createTempDirectory("graft_ing").toString
+    val G2 = "0022400002" // same season partition as G
+    def land(rows: (String, Long)*): Unit =
+      rows.map { case (g, p) => (g, 100L, "Hornets", p, "F", "L", 0.0, 28800.0) }
+        .toDF("GAME_ID", "TEAM_ID", "TEAM_NAME", "PERSON_ID",
+          "PLAYER_FIRST", "PLAYER_LAST", "IN_TIME_REAL", "OUT_TIME_REAL")
+        .write.mode("overwrite").parquet(s"$root/in/rotations_raw")
+    def published(): Set[(String, Long)] = spark.read.parquet(s"$root/out/rotations")
+      .select("GAME_ID", "PLAYER_ID").as[(String, Long)].collect().toSet
+    val a = args(s"$root/in", s"$root/out", "rotations")
+    land((G, 1L), (G, 2L), (G2, 3L))
+    IngestMain.runWith(spark, a)
+    assert(published() == Set((G, 1L), (G, 2L), (G2, 3L)))
+    // the re-fetched game G no longer lists player 2; game G2 is not in
+    // this run and keeps its row
+    land((G, 1L))
+    IngestMain.runWith(spark, a)
+    assert(published() == Set((G, 1L), (G2, 3L)))
+  }
+
   test("team_game_log: id on (GAME_ID, TEAM_ID), season derived from the game id") {
     val root = Files.createTempDirectory("graft_ing").toString
     Seq((G, 100L, "CHA vs CLE"), (G, 200L, "CLE @ CHA"))

@@ -31,23 +31,6 @@ class DedupVolumeSpec extends SparkSpec {
     assert(leaked.size <= 3, s"rounds leaked ${leaked.size} persisted RDDs")
   }
 
-  test("pointer jumping turns the 32-chain's rounds from diameter into ~log2(diameter)") {
-    val n = 32
-    val pairs = (0 until n).map(i => (i.toLong, (i + 1).toLong))
-      .toDF("doc_a", "doc_b")
-    val (labels, rounds) =
-      DedupOps.componentsWithRounds(pairs, pointerJumping = true)
-    val got = labels.as[(Long, Long)].collect().toMap
-    assert(got.size == n + 1)
-    assert(got.values.forall(_ == 0L), "same fixpoint as the plain rounds")
-    // distance to the minimum better-than-halves per round: a 32-hop chain
-    // needs ~log2(32)=5 propagation rounds + the detect round, never the
-    // 32 the plain form takes (exact count left loose — the fused init
-    // hop and the halving interact off-by-one-ishly across shapes)
-    assert(rounds <= 7, s"pointer jumping must converge in O(log d) rounds, got $rounds")
-    assert(rounds >= 3, s"a 32-chain cannot converge in $rounds rounds — test is vacuous")
-  }
-
   test("star at 16x: rounds follow diameter (2 when the min label sits on a leaf), not size") {
     // center 100, leaves 1..64: min label 1 must cross the center — diameter 2
     val pairs = (1L to 64L).map(l => (100L, l)).toDF("doc_a", "doc_b")
@@ -56,88 +39,6 @@ class DedupVolumeSpec extends SparkSpec {
     assert(got.size == 65)
     assert(got.values.forall(_ == 1L))
     assert(rounds == 2, s"star must converge by diameter (init hop + 1) + detect, got $rounds")
-  }
-
-  test("componentsStar == components on clique, chain, and braided graphs; cycles ~ log") {
-    def labelsOf(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long)].collect().toMap
-    // clique 0..5, 64-chain, and a braid: two chains cross-linked with the
-    // global min entering from one end (the shape that slowed pointer
-    // jumping on the cosine graph)
-    val clique = (for (a <- 0L to 5L; b <- (a + 1) to 5L) yield (a, b))
-      .toDF("doc_a", "doc_b")
-    val chain = (0 until 64).map(i => (i.toLong, (i + 1).toLong))
-      .toDF("doc_a", "doc_b")
-    val braid = ((0 until 32).map(i => (i * 2L + 2, i * 2L + 4)) ++   // evens
-      (0 until 32).map(i => (i * 2L + 3, i * 2L + 5)) ++              // odds
-      Seq((0L, 66L), (66L, 67L), (2L, 3L))                            // cross + min tail
-      ).toDF("doc_a", "doc_b")
-    for ((g, name) <- Seq((clique, "clique"), (chain, "chain"), (braid, "braid"))) {
-      // maxIter raised for label-prop: the 64-chain's diameter exceeds the
-      // default 50-round budget — the exact failure mode star sidesteps
-      val plain = labelsOf(DedupOps.components(g, maxIter = 100))
-      val (star, cycles) = DedupOps.componentsStarWithRounds(g)
-      assert(labelsOf(star) == plain, s"$name: star and label-prop disagree")
-      assert(cycles <= 8, s"$name: star took $cycles cycles — O(log) promise broken")
-    }
-    // the 64-chain specifically: label-prop needs 64 rounds, star ~6 cycles,
-    // and every cycle must release the previous cycle's checkpoint blocks
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (_, chainCycles) = DedupOps.componentsStarWithRounds(chain)
-    assert(chainCycles <= 8, s"64-chain took $chainCycles star cycles")
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 3, s"star cycles leaked ${leaked.size} persisted RDDs")
-    // dedupeCorpus(star = true) keeps exactly the survivors label-prop
-    // keeps (a 24-chain: inside label-prop's default round budget)
-    val short = (0 until 24).map(i => (i.toLong, (i + 1).toLong))
-      .toDF("doc_a", "doc_b")
-    val docs = (0L to 30L).map(i => (i, s"d$i")).toDF("doc_id", "text")
-    assert(
-      DedupOps.dedupeCorpus(docs, short, star = true)
-        .select("doc_id").as[Long].collect().toSet ==
-      DedupOps.dedupeCorpus(docs, short)
-        .select("doc_id").as[Long].collect().toSet)
-  }
-
-  test("componentsStar: one action per cycle — the convergence test rides the checkpoint job") {
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            "star-probe" == js.properties.getProperty("spark.jobGroup.id"))
-          seen.add(js.stageInfos.lastOption.map(_.name).getOrElse("?"))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup("star-probe", "componentsStar action probe", false)
-    try {
-      val chain = (0 until 16).map(i => (i.toLong, (i + 1).toLong)).toDF("doc_a", "doc_b")
-      val (labels, cycles) = DedupOps.componentsStarWithRounds(chain)
-      labels.collect()
-      Thread.sleep(1000) // listener bus is async
-      val actions = seen.asScala.map(_.takeWhile(_ != ':')).toSeq
-      // the only in-function DRIVER actions are the eager localCheckpoints
-      // (the canonical edge set's size and each cycle's set-equality test
-      // both ride those jobs as Observations): a `count at DedupOps` /
-      // `isEmpty at DedupOps` here means the probe-pair-per-cycle shape is
-      // back. AQE's async subjobs (withThreadLocalCaptured) belong to
-      // those same actions, and the spec's own collect is the one other
-      // legitimate action.
-      val allowed = Set("localCheckpoint at DedupOps.scala",
-        "collect at DedupVolumeSpec.scala",
-        "$anonfun$withThreadLocalCaptured$2 at CompletableFuture.java")
-      val extra = actions.toSet -- allowed
-      assert(extra.isEmpty, s"unexpected actions: $extra")
-      // and at most one named action per cycle (plus the init checkpoint):
-      // a second driver action per cycle would surface here
-      val checkpoints = actions.count(_ == "localCheckpoint at DedupOps.scala")
-      assert(checkpoints <= cycles + 1,
-        s"more checkpoint actions ($checkpoints) than 1 init + $cycles cycles")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("one action per round: only the fused materialize+converge count runs (no isEmpty probe)") {

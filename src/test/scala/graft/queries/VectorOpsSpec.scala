@@ -64,13 +64,13 @@ class VectorOpsSpec extends SparkSpec {
     val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
       plan)
-    // and the full q109 components agree with componentsStar over the
-    // same pair set (composition smoke on real data)
+    // and the full q109 components agree with a driver-side union-find
+    // over the same pair set (composition smoke on real data)
     val got = SparkEntry.queries("q109_embed_dedup_lsh")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exp = DedupOps.componentsStar(
-        pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val edges = pairs.select(col("vec_a"), col("vec_b")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val exp = ComponentsPropSpec.unionFind(edges.toSeq).toSet
     assert(got.nonEmpty && got == exp)
   }
 

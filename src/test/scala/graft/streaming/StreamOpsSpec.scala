@@ -480,50 +480,6 @@ class StreamOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("trackLineupsTws (transformWithState + RocksDB) matches the fMGWS variant's behavior") {
-    implicit val sqlCtx = spark.sqlContext
-    val G = "0022400102"
-    val T1 = 100L
-    val T2 = 200L
-    val roster: Seq[GameSide] =
-      (101L to 105L).map(p => GameSide(G, 0, T1, p, -1, Seq(Stint(0.0, 28800.0)), null)) ++
-        Seq(GameSide(G, 0, T1, 106L, -1, Seq(Stint(3600.0, 28800.0)), null)) ++
-        (201L to 205L).map(p => GameSide(G, 0, T2, p, -1, Seq(Stint(0.0, 28800.0)), null))
-    def ev(num: Long, typ: Int, clock: String,
-        p1: Option[Long] = None, t1: Option[Long] = None,
-        p2: Option[Long] = None, t2: Option[Long] = None) = {
-      val Array(m, s) = clock.split(":").map(_.toInt)
-      PbpEvent(G, num, typ, 0, 1, clock, 720 - (m * 60 + s), p1, t1, p2, t2)
-    }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[PbpEvent]
-    val q = StreamOps.trackLineupsTws(in.toDS(), roster.toDS())
-      .writeStream.format("memory").queryName("lineups_tws").outputMode("append").start()
-    try {
-      in.addData(ev(1L, 10, "12:00", Some(101L), Some(T1), Some(201L), Some(T2)))
-      q.processAllAvailable()
-      // next batch: the substitution must apply against the REMEMBERED lineup
-      in.addData(ev(2L, 8, "6:00", Some(103L), Some(T1), Some(106L), Some(T1)))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        """SELECT EVENTNUM, TEAM1_PLAYER1, TEAM1_PLAYER2, TEAM1_PLAYER3,
-                  TEAM1_PLAYER4, TEAM1_PLAYER5 FROM lineups_tws ORDER BY EVENTNUM""")
-        .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-      assert(rows == Seq(
-        (1L, 101L, 102L, 103L, 104L, 105L),
-        (2L, 101L, 102L, 104L, 105L, 106L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("a roster game with no events yet only seeds state (initial-state keys fire with an empty iterator)") {
     implicit val sqlCtx = spark.sqlContext
     val T1 = 100L
