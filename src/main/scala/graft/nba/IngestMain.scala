@@ -84,6 +84,9 @@ object IngestMain {
       case "team_game_log" => Etl.teamGameLog(in)
       case "shot_details" => Etl.shotDetails(in)
     }
-    Publish.idempotent(enriched, outDir, args.delta, deltaKeys)
+    // a full rerun replaces whole units inside its scope: a combo spans
+    // games, so a --game-id run recomputes only the combo's shots in that game
+    val unit = if (args.gameId.isDefined) (deltaKeys :+ "GAME_ID").distinct else deltaKeys
+    Publish.idempotent(enriched, outDir, args.delta, unit)
   }
 }

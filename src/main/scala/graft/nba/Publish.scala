@@ -11,7 +11,8 @@ import graft.sources.Warehouse
   *   - delta mode: the rows are by construction absent from the target,
   *     so they plain-append (one write, no read of the target);
   *   - full mode: the run recomputes whole units (a game, or a
-  *     shot-chart fetch combo), so every existing row of a unit present in
+  *     shot-chart fetch combo, cut to one game when the run is scoped to
+  *     one), so every existing row of a unit present in
   *     the new rows is replaced by that unit's new rows — a row the
   *     recompute no longer produces (a player gone from a re-fetched
   *     rotation) is deleted, not kept. Incoming rows are deduped by `id`
@@ -55,10 +56,11 @@ object Publish {
     }
 
   /** Publish `newRows` into `outDir`. `unit` names the columns of the unit
-    * a run recomputes — the keys the caller passes to [[deltaOnly]], a
-    * game for every table but shot_details: in full mode the existing
-    * rows of every unit present in `newRows` are dropped before the
-    * merge. */
+    * a run recomputes — a game for every table but shot_details, whose
+    * unit is the fetch combo, narrowed to the game under `--game-id`: in
+    * full mode the existing rows of every unit present in `newRows` are
+    * dropped before the merge, so a unit must lie wholly inside the run's
+    * scope. */
   def idempotent(newRows: DataFrame, outDir: String, delta: Boolean,
       unit: Seq[String] = Seq("GAME_ID"))(implicit spark: SparkSession): Unit = {
     // heal interrupted swaps before ANY read of the target: a partition

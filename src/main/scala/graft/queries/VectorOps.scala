@@ -178,8 +178,7 @@ object VectorOps {
     // producer swaps to the LSH/IVF-bucketed kernel; the component
     // collapse is identical. Cosine similarity chains (a near b near c
     // without a near c), so this graph is deeper than text near-dups
-    // (diameter 16 at sf0.1): 16 label rounds, where large-star/small-star
-    // took 6 costlier cycles and ran this query about 10% faster.
+    // (diameter 16 at sf0.1, 16 label rounds).
     "q53_embed_dedup" -> { (s, dir) =>
       val pairs = exactNearDup(vecs(s, dir), NearDupThreshold, allPairsBlocks(s))(s)
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))

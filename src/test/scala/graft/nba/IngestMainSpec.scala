@@ -154,6 +154,26 @@ class IngestMainSpec extends SparkSpec {
       Set(s"7-$G-10", s"7-$G-11", s"8-$G-12"))
   }
 
+  test("shot_details: a full rerun scoped to one game replaces only that game's shots") {
+    val root = Files.createTempDirectory("graft_ing").toString
+    val G2 = "0022400002"
+    def land(rows: (String, Long)*): Unit = rows
+      .map { case (g, ev) => (7L, 100L, g, ev, "2024-25", "Regular Season") }
+      .toDF("PLAYER_ID", "TEAM_ID", "GAME_ID", "GAME_EVENT_ID", "SEASON", "SEASON_TYPE")
+      .write.mode("overwrite").parquet(s"$root/in/shot_details_raw")
+    def published(): Set[String] =
+      spark.read.parquet(s"$root/out/shot_details").select("id").as[String].collect().toSet
+    val a = args(s"$root/in", s"$root/out", "shot_details")
+    land((G, 10L), (G, 11L), (G2, 20L))
+    IngestMain.runWith(spark, a)
+    assert(published() == Set(s"7-$G-10", s"7-$G-11", s"7-$G2-20"))
+    // the re-fetched game G no longer holds event 11; the combo's shots in
+    // game G2 lie outside this run's scope and keep their row
+    land((G, 10L), (G2, 20L))
+    IngestMain.runWith(spark, a.copy(season = None, seasonType = None, gameId = Some(G)))
+    assert(published() == Set(s"7-$G-10", s"7-$G2-20"))
+  }
+
   test("a delta run fetches only games not yet published; a delta with nothing new fetches none") {
     import IngestMainSpec.CountingApi
     val root = Files.createTempDirectory("graft_ing").toString
