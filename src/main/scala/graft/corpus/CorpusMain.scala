@@ -639,27 +639,27 @@ object CorpusMain {
       minHits: Long, embeddings: Option[String], cosThreshold: Double,
       broadcastBench: Boolean, exportJsonl: Boolean,
       quarantineStaged: Boolean,
-      publishIndex: Option[String] = None,
-      publishVectorIndex: Option[String] = None,
-      publishVectors: Option[String] = None,
-      quota: Option[Int] = None,
-      publishShingles: Option[String] = None,
-      tokenBudget: Option[Long] = None,
-      chunk: Option[Int] = None,
-      chunkStride: Option[Int] = None,
-      stats: Boolean = false,
-      reviewSample: Option[Int] = None,
-      keepBest: Boolean = false,
-      normalize: Boolean = false,
-      cutSpans: Option[Int] = None,
-      urlDedup: Boolean = false,
-      quotaHeap: Boolean = false,
-      qualityFloor: Option[Double] = None,
-      floorThreshold: Boolean = false,
-      semanticBench: Option[String] = None,
-      semanticThreshold: Double = 0.3,
-      auditSplits: Option[Double] = None,
-      splitCuts: (String, String) = SplitCuts): Unit = {
+      publishIndex: Option[String],
+      publishVectorIndex: Option[String],
+      publishVectors: Option[String],
+      quota: Option[Int],
+      publishShingles: Option[String],
+      tokenBudget: Option[Long],
+      chunk: Option[Int],
+      chunkStride: Option[Int],
+      stats: Boolean,
+      reviewSample: Option[Int],
+      keepBest: Boolean,
+      normalize: Boolean,
+      cutSpans: Option[Int],
+      urlDedup: Boolean,
+      quotaHeap: Boolean,
+      qualityFloor: Option[Double],
+      floorThreshold: Boolean,
+      semanticBench: Option[String],
+      semanticThreshold: Double,
+      auditSplits: Option[Double],
+      splitCuts: (String, String)): Unit = {
     // mixing first: membership is a pure hash of (doc_id, rate table), so
     // mixFilter is a broadcast join + filter — no shuffle, nothing read
     // beyond the scan every later stage pays only for the kept fraction of.

@@ -1,6 +1,6 @@
 package graft.corpus
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -40,8 +40,9 @@ import graft.sources.{Jsonl, Warehouse}
   * which sees the whole crawl at once, uses min-doc_id throughout.
   *
   * Statelessness of the in-plan gate (no watermark, no state store) is
-  * pinned by StreamOpsSpec; this main adds the end-to-end composition +
-  * exactly-once publish, pinned by CorpusStreamMainSpec.
+  * pinned by DedupOpsSpec (the near-dup gate) and TextOpsSpec (mixFilter +
+  * hashSplit); this main adds the end-to-end composition + exactly-once
+  * publish, pinned by CorpusStreamMainSpec.
   *
   * Deliberately absent: the batch twin's per-domain quota (`--quota`)
   * and token budget (`--token-budget`). A per-BATCH cap is not a global

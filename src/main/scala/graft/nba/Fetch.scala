@@ -250,7 +250,7 @@ object Fetch {
       // as their primary path
       val dir = s"${args.input}/$BoxTable"
       Warehouse.recover(spark, dir)
-      val merged = scala.util.Try(Warehouse.readTable(spark, dir)).toOption match {
+      val merged = Warehouse.readTableIfPresent(spark, dir) match {
         case Some(existing) =>
           val keys = raw.select(col("GAME_ID"), col("PERIOD")).distinct()
           existing.join(keys, Seq("GAME_ID", "PERIOD"), "left_anti").unionByName(raw)

@@ -1,8 +1,6 @@
 package graft.nba
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.functions.GameIds
 
 /** The four thin ingest scripts as one runnable entry point, selected by
   * `--table` (reference: etl/play_by_play.py, etl/rotations.py,

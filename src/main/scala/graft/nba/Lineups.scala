@@ -5,7 +5,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{GameClock, GameIds}
+import graft.functions.GameClock
 import graft.ops.Checkpoints
 import graft.schema.{PbpEvent, PbpWithPlayers, Stint}
 
@@ -140,7 +140,7 @@ object Lineups {
     Try {
       val events = evIt.toArray
       if (events.isEmpty) Vector.empty
-      else processGame(gid, events, sideIt.toArray).toVector
+      else processGame(gid, events, sideIt.toArray)
     }
 
   def withPlayers(
@@ -237,89 +237,44 @@ object Lineups {
       () => Checkpoints.rddsOf(outcomes.toDF()).foreach(_.unpersist(false)))
   }
 
-  /** Resumable lineup state — also the streaming operator's GroupState
-    * (graft.streaming.StreamOps.trackLineups). `seenEventnums` carries the
-    * A5 duplicate-id invariant across slices: a replayed EVENTNUM in a
-    * later micro-batch throws exactly like a duplicate inside one batch
-    * (reference utils/utils.py:1-10). A game is ~500 events, so the set is
-    * bounded and cheap to keep in state.
-    *
-    * Schema-evolution caveat: any field change here changes the streaming
-    * state schema, and a trackLineups query restarted from a checkpoint
-    * written by an older build fails Spark's state-store compatibility
-    * check (stateStore.stateSchemaCheck) — restart such streams from a
-    * fresh checkpoint (a game's state rebuilds from its event log). */
-  case class LineupState(
-      team1: Long, team2: Long,
-      cur1: Seq[Long], cur2: Seq[Long],
-      initialized: Boolean,
-      seenEventnums: Seq[Long] = Seq.empty,
-      // the game's roster/starters/matchup side input, delivered ONCE via
-      // the streaming initial-state API and carried in the state store —
-      // the at-scale replacement for a driver-held roster map (a game is
-      // ~20 small rows, so state residency beats re-shipping the roster on
-      // every event through a stream-static join)
-      side: Seq[GameSide] = Seq.empty)
-
-  /** Initial state carrying only the roster — what the streaming trackers
-    * seed each game with before its first event arrives. */
-  def rosterState(side: Seq[GameSide]): LineupState =
-    LineupState(0L, 0L, Nil, Nil, initialized = false, side = side)
-
   /** One game, in memory (a game is ~500 events + ~20 roster rows). */
   private[graft] def processGame(
       gid: String,
       eventsIn: Array[PbpEvent],
-      side: Array[GameSide]): Iterator[PbpWithPlayers] =
-    advance(gid, eventsIn.sortBy(e => (e.PERIOD, e.SECONDS_FROM_START, e.EVENTNUM)),
-      side, None)._1.iterator
-
-  /** Apply a sorted slice of events to prior state (None = start of game),
-    * returning the emitted rows and the state after the slice — the shared
-    * engine of the batch cogroup and the streaming flatMapGroupsWithState
-    * variant. */
-  private[graft] def advance(
-      gid: String,
-      events: Array[PbpEvent],
-      side: Array[GameSide],
-      prior: Option[LineupState]): (Vector[PbpWithPlayers], LineupState) = {
+      side: Array[GameSide]): Vector[PbpWithPlayers] = {
+    val events = eventsIn.sortBy(e => (e.PERIOD, e.SECONDS_FROM_START, e.EVENTNUM))
     val rotations = side.filter(_.kind == 0)
     val starters: Map[(Int, Long), List[Long]] = side.filter(_.kind == 1)
       .groupBy(g => (g.PERIOD, g.TEAM_ID))
       .map { case (k, rows) => k -> rows.map(_.PLAYER_ID).sorted.toList }
     val matchups = side.filter(_.kind == 2)
 
-    // J5 team resolution (reference :49-79) — from prior state when resuming
-    val (team1, team2) = prior.filter(_.initialized).map(s => (s.team1, s.team2))
+    // J5 team resolution (reference :49-79)
+    val (team1, team2) = events
+      .find(e => e.EVENTMSGTYPE == 10 && e.EVENTMSGACTIONTYPE == 0)
+      .flatMap(e => e.PLAYER1_TEAM_ID.zip(e.PLAYER2_TEAM_ID))
       .getOrElse {
-        events
-          .find(e => e.EVENTMSGTYPE == 10 && e.EVENTMSGACTIONTYPE == 0)
-          .flatMap(e => e.PLAYER1_TEAM_ID.zip(e.PLAYER2_TEAM_ID))
-          .getOrElse {
-            require(matchups.length == 2,
-              s"could not determine teams for game $gid from team_game_log")
-            val home = matchups.find(m => m.MATCHUP != null && m.MATCHUP.contains("vs"))
-            val away = matchups.find(m => m.MATCHUP != null && m.MATCHUP.contains("@"))
-            require(home.nonEmpty && away.nonEmpty,
-              s"could not parse MATCHUP for game $gid")
-            (home.get.TEAM_ID, away.get.TEAM_ID)
-          }
+        require(matchups.length == 2,
+          s"could not determine teams for game $gid from team_game_log")
+        val home = matchups.find(m => m.MATCHUP != null && m.MATCHUP.contains("vs"))
+        val away = matchups.find(m => m.MATCHUP != null && m.MATCHUP.contains("@"))
+        require(home.nonEmpty && away.nonEmpty,
+          s"could not parse MATCHUP for game $gid")
+        (home.get.TEAM_ID, away.get.TEAM_ID)
       }
 
     def teamRot(tid: Long) = rotations.filter(_.TEAM_ID == tid)
     val rot1 = teamRot(team1)
     val rot2 = teamRot(team2)
 
-    // initial lineups: stint starting at 0 (reference :81-86), or resumed
+    // initial lineups: stint starting at 0 (reference :81-86)
     def initial(rot: Array[GameSide]): mutable.ArrayBuffer[Long] = {
       val b = mutable.ArrayBuffer.from(
         rot.filter(_.STINTS.exists(_.IN_TIME_REAL == 0.0)).map(_.PLAYER_ID))
       b.sortInPlace()
     }
-    var cur1 = prior.filter(_.initialized)
-      .map(s => mutable.ArrayBuffer.from(s.cur1)).getOrElse(initial(rot1))
-    var cur2 = prior.filter(_.initialized)
-      .map(s => mutable.ArrayBuffer.from(s.cur2)).getOrElse(initial(rot2))
+    var cur1 = initial(rot1)
+    var cur2 = initial(rot2)
 
     def sub(players: mutable.ArrayBuffer[Long], outId: Long, inId: Long, eventnum: Long): Unit = {
       val idx = players.indexOf(outId)
@@ -341,9 +296,8 @@ object Lineups {
       next.sortInPlace()
     }
 
-    val seenEventnums =
-      mutable.HashSet.from(prior.toSeq.flatMap(_.seenEventnums))
-    val out = events.iterator.map { e =>
+    val seenEventnums = mutable.HashSet.empty[Long]
+    events.iterator.map { e =>
       // A5 duplicate-id invariant (reference utils/utils.py:1-10, :163)
       if (!seenEventnums.add(e.EVENTNUM))
         throw new IllegalStateException(s"duplicate id $gid-${e.EVENTNUM}")
@@ -385,11 +339,6 @@ object Lineups {
         TEAM2_PLAYER1 = cur2(0), TEAM2_PLAYER2 = cur2(1), TEAM2_PLAYER3 = cur2(2),
         TEAM2_PLAYER4 = cur2(3), TEAM2_PLAYER5 = cur2(4))
     }.toVector
-    (out, LineupState(team1, team2, cur1.toSeq, cur2.toSeq, initialized = true,
-      seenEventnums = seenEventnums.toSeq.sorted,
-      // carry the side input forward: a streaming resume gets the roster
-      // from state, not from a re-delivered side channel
-      side = side.toSeq))
   }
 
   /** J6 relational cross-check (SURVEY.md §2.3 J6): every event joined to

@@ -84,6 +84,7 @@ object PipelineMain {
     import graft.sources.Warehouse
 
     def tbl(name: String) = Warehouse.readTable(spark, s"${args.input}/$name")
+    def optTbl(name: String) = Warehouse.readTableIfPresent(spark, s"${args.input}/$name")
     val outDir = s"${args.output}/play_by_play_with_players"
     val errDir = s"${args.output}/lineup_errors"
     Warehouse.recover(spark, outDir) // heal interrupted swaps before any read
@@ -92,8 +93,8 @@ object PipelineMain {
     val pbp = Publish.deltaOnly(
       Publish.scope(tbl("play_by_play"), args), args.delta, outDir, Seq("GAME_ID"))
 
-    val starters = scala.util.Try(tbl("players_on_court_at_start_of_period")).toOption
-    val teamLog = scala.util.Try(tbl("team_game_log")).toOption
+    val starters = optTbl("players_on_court_at_start_of_period")
+    val teamLog = optTbl("team_game_log")
     val tracked = Lineups.tracked(pbp, tbl("rotations"), starters, teamLog)
 
     val newRows = tracked.rows.toDF()
@@ -106,7 +107,7 @@ object PipelineMain {
     // the tracker's staged outcomes, not from the play-by-play again
     val processed = tracked.processed.toDF("GAME_ID")
     val errDf = tracked.errors.toDF()
-    scala.util.Try(Warehouse.readTable(spark, errDir)).toOption match {
+    Warehouse.readTableIfPresent(spark, errDir) match {
       case Some(exErr) =>
         Warehouse.replaceDir(
           exErr.join(processed, Seq("GAME_ID"), "left_anti").unionByName(errDf), errDir)

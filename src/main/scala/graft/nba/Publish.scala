@@ -49,7 +49,7 @@ object Publish {
   def deltaOnly(scoped: DataFrame, delta: Boolean, outDir: String,
       keys: Seq[String])(implicit spark: SparkSession): DataFrame =
     if (!delta) scoped
-    else scala.util.Try(Warehouse.readTable(spark, outDir)).toOption match {
+    else Warehouse.readTableIfPresent(spark, outDir) match {
       case Some(existing) =>
         Upsert.deltaNew(existing.select(keys.map(col): _*), scoped, keys)
       case None => scoped
@@ -71,7 +71,7 @@ object Publish {
       newRows.write.mode("append")
         .partitionBy(Warehouse.PartitionCols: _*).parquet(outDir)
     else {
-      val merged = scala.util.Try(Warehouse.readTable(spark, outDir)).toOption match {
+      val merged = Warehouse.readTableIfPresent(spark, outDir) match {
         case Some(ex) =>
           // merge only the partitions this run recomputes; the semi-join on
           // the partition columns prunes the rest of the warehouse, and the

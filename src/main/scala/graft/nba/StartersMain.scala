@@ -61,7 +61,8 @@ object StartersMain {
     val box: DataFrame = transport match {
       case Some(t) =>
         Fetch.landBoxScores(pbp.select(col("GAME_ID"), col("PERIOD")), args, t)
-      case None => scala.util.Try(tbl("box_score_per_period")).toOption
+      case None => graft.sources.Warehouse
+        .readTableIfPresent(spark, s"${args.input}/box_score_per_period")
         .getOrElse(Seq.empty[(String, Int, Long, Long, Option[Double])]
           .toDF("GAME_ID", "PERIOD", "PLAYER_ID", "TEAM_ID", "MIN"))
     }

@@ -31,23 +31,6 @@ object Shingles {
     when(size(tokens) >= n, grams).otherwise(array().cast("array<string>"))
   }
 
-  /** One md5 hex digest per shingle — sliced into independent sub-hashes
-    * by minHashSlice (8-32x cheaper than hashing once per seed/bit). md5
-    * hex strings order identically in every engine, which makes signatures
-    * oracle-reproducible (unlike engine-specific 64-bit hashes).
-    *
-    * Hot-path caveat: referencing this array from N downstream lambdas
-    * (e.g. one array_min per seed) re-inlines the md5 transform N times —
-    * Spark does no CSE across lambda bodies. For bulk signatures, explode
-    * to postings and groupBy-min instead (queries.DedupOps q31). */
-  def md5PerShingle(shingles: Column): Column =
-    transform(shingles, x => md5(x))
-
-  /** MinHash value for seed `j`: min over shingles of the j-th 4-hex-char
-    * (16-bit) slice of the per-shingle md5. Up to 8 seeds per digest. */
-  def minHashSlice(md5s: Column, seed: Int): Column =
-    array_min(transform(md5s, h => substring(h, 4 * seed + 1, 4)))
-
   /** Exact Jaccard of two distinct-element shingle arrays. Int/int division
     * after explicit double casts — bit-identical across engines. */
   def jaccard(a: Column, b: Column): Column =

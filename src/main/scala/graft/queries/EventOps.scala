@@ -34,11 +34,9 @@ object EventOps {
 
   private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(18,4)")
 
-  /** Default funnel: the acquisition path through the synthetic event log.
-    * Shared with the streaming twin ([[graft.streaming]]), hence
-    * graft-wide visibility. */
-  private[graft] val DefaultFunnelSteps = Seq("view", "click", "purchase")
-  private[graft] val DefaultFunnelGap = 86400L // q80's per-step deadline
+  /** Default funnel: the acquisition path through the synthetic event log. */
+  private val DefaultFunnelSteps = Seq("view", "click", "purchase")
+  private val DefaultFunnelGap = 86400L // q80's per-step deadline
 
   /** Ordered-funnel analysis (q65): how many users complete each prefix of
     * `steps`, where step i counts only at its earliest occurrence STRICTLY
@@ -63,9 +61,7 @@ object EventOps {
     * r qualifies iff its ts is strictly greater — the same condition as
     * "strictly after the user's final earliest step-i time", because a
     * qualifying step-i event earlier than ts(r) is always inside r's
-    * prefix. Pinned against a literal join-cascade in EventOpsSpec.
-    * [[graft.streaming.StreamOps.funnelProgress]] is the streaming twin
-    * (same rule as per-user state; stream==batch census pin). */
+    * prefix. Pinned against a literal join-cascade in EventOpsSpec. */
   def funnel(events: DataFrame,
       steps: Seq[String] = DefaultFunnelSteps,
       maxGapSeconds: Option[Long] = None): DataFrame = {
@@ -371,9 +367,8 @@ object EventOps {
   /** Key-skew report (q70): the operational pre-join diagnostic — the top
     * `k` hottest values of a prospective join/partition key, each with its
     * row count and share of the table. At 100 TB this is the cheap pass an
-    * operator runs BEFORE a big join to decide whether the documented skew
-    * levers (ops/Salting, AQE skew-join) are needed, and it names the keys
-    * to salt.
+    * operator runs BEFORE a big join to decide whether a skew lever (AQE
+    * skew-join, salting) is needed, and it names the hot keys.
     *
     * Shape at scale: one map-side-combinable count per key (the only
     * corpus-sized exchange), a 1-row total joined back via broadcast

@@ -37,10 +37,24 @@ object Warehouse {
     * read by `spark.read.parquet` itself, so such tables — and a missing
     * `dir` — behave exactly as before. */
   def readTable(spark: SparkSession, dir: String): DataFrame =
-    footerSchema(spark, dir) match {
-      case Some(schema) => spark.read.schema(schema).parquet(dir)
-      case None => spark.read.parquet(dir)
+    readTableIfPresent(spark, dir).getOrElse(spark.read.parquet(dir))
+
+  /** [[readTable]] of a table that may not be published yet: None when
+    * `dir` is missing or holds no visible data file, the table otherwise.
+    * Every other failure (an unreadable footer, a listing error)
+    * propagates, so a caller that rewrites the table from what it read
+    * never mistakes a damaged table for an absent one. */
+  def readTableIfPresent(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) None
+    else visibleDataFiles(fs, root).minByOption(_.toString).map { file =>
+      footerSchema(fs, file) match {
+        case Some(schema) => spark.read.schema(schema).parquet(dir)
+        case None => spark.read.parquet(dir)
+      }
     }
+  }
 
   /** The footer key under which Spark's parquet writer stores the row schema. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
@@ -55,19 +69,14 @@ object Warehouse {
   private def footerRows(fs: FileSystem, file: Path): Long =
     footer(fs, file).getBlocks.asScala.map(_.getRowCount).sum
 
-  /** Spark's schema of the table at `dir` from one footer, or None when
-    * only Spark's own inference can answer (see [[readTable]]). */
-  private def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) None
-    else visibleDataFiles(fs, root).sortBy(_.toString).headOption.flatMap { file =>
-      Try(footer(fs, file)).toOption
-        .flatMap(f => Option(f.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
-        .flatMap(json => Try(DataType.fromJson(json)).toOption)
-        .collect { case s: StructType => s }
-    }
-  }
+  /** Spark's schema of a table from the footer of `file`, its first data
+    * file, or None when only Spark's own inference can answer (see
+    * [[readTable]]). */
+  private def footerSchema(fs: FileSystem, file: Path): Option[StructType] =
+    Try(footer(fs, file)).toOption
+      .flatMap(f => Option(f.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
+      .flatMap(json => Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
 
   /** S9 CSV sink for golden-file parity (reference: test.py:15). */
   def writeCsv(df: DataFrame, dir: String): Unit =

@@ -46,7 +46,6 @@ object ProfGate {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = java.nio.file.Files.createTempDirectory("prof_gate").toString
     val spark = Sessions.local("prof-gate")
-    import spark.implicits._
 
     val corpus = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")

@@ -1,7 +1,6 @@
 package graft.corpus
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** PurgeMain: the one-command erasure composition — curation estate +

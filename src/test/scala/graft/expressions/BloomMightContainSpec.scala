@@ -61,7 +61,7 @@ class BloomMightContainSpec extends SparkSpec {
 
   test("registered for SQL via GraftExtensions") {
     val bytes = bloomOf(Seq(7L))
-    val got = Seq(7L, 1234567L).toDF("h")
+    Seq(7L, 1234567L).toDF("h")
       .createOrReplaceTempView("bloom_probe_fixture")
     val rows = spark.sql(
       "SELECT graft_might_contain(h, " +

@@ -65,7 +65,7 @@ class GoldenRotationSpec extends SparkSpec {
   }
 
   test("six real opening stints (IN_TIME_REAL == 0) per the initial-lineup rule feed") {
-    // Lineups.advance seeds initial lineups from stints starting at 0.0
+    // Lineups.processGame seeds initial lineups from stints starting at 0.0
     // (reference etl/play_by_play_with_players.py:81-86) — on the real file
     // only 6 of 19 players qualify (the fixture is mid-capture, not a full
     // game), which is exactly why the starters fallback (kind-1 side rows)

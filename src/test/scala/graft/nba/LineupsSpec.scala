@@ -73,9 +73,7 @@ class LineupsSpec extends SparkSpec {
         (201L to 205L).map(p => (T2, p, Seq(Stint(0.0, 28800.0)))) ++
         Seq((T2, 206L, Seq(Stint(14400.0, 28800.0)))))
         .toDF("TEAM_ID", "PLAYER_ID", "STINTS").withColumn("GAME_ID", lit(G))
-    val rows = Lineups.withPlayers(pbpOf(Seq(jumpBall,
-      (G, 10L, 12, 0, 2, "12:00", None, None, None, None, None, None))), rot)
-      .collect().sortBy(_.EVENTNUM)
+    val rows = Lineups.withPlayers(pbp, rot).collect().sortBy(_.EVENTNUM)
     def t1(r: graft.schema.PbpWithPlayers) =
       Seq(r.TEAM1_PLAYER1, r.TEAM1_PLAYER2, r.TEAM1_PLAYER3, r.TEAM1_PLAYER4, r.TEAM1_PLAYER5)
     assert(t1(rows(0)) == (101L to 105L))

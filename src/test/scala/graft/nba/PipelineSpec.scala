@@ -2,7 +2,6 @@ package graft.nba
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.schema.Stint
 import graft.sources.{RestDecoder, Warehouse}
 
 /** End-to-end pipeline mirroring the reference's smoke flow (test.py:11-15

@@ -1,7 +1,6 @@
 package graft.nba
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sources.Warehouse
 
@@ -46,6 +45,45 @@ class PublishSpec extends SparkSpec {
     Publish.idempotent(in, dir, delta = true)
     val got = spark.read.parquet(dir).select("id").as[String].collect().toSet
     assert(got == Set("A-1", "C-1"), s"healed game A must not duplicate: $got")
+  }
+
+  /** Publishes games A and B into one partition, then overwrites every
+    * data file of it with bytes that are not parquet (dropping the
+    * checksum sidecars, so the read fails on the footer). Returns the
+    * table dir and a snapshot of the partition's files. */
+  private def corruptedTable(): (String, () => Map[String, Seq[Byte]]) = {
+    val dir = s"${Files.createTempDirectory("graft_pub")}/t"
+    Publish.idempotent(rows(("A-1", "A"), ("B-1", "B")), dir, delta = false)
+    val part = Paths.get(dir, "SEASON=2024-25", "SEASON_TYPE=Regular Season")
+    def files() = {
+      val s = Files.list(part)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]) finally s.close()
+    }
+    files().filter(_.getFileName.toString.endsWith(".crc")).foreach(Files.delete)
+    files().filter(_.getFileName.toString.startsWith("part-"))
+      .foreach(f => Files.write(f, "not a parquet file".getBytes("UTF-8")))
+    (dir, () => files().map(f =>
+      f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap)
+  }
+
+  test("a full publish over an unreadable partition fails and leaves its files alone") {
+    val (dir, snapshot) = corruptedTable()
+    val before = snapshot()
+    intercept[Exception] {
+      Publish.idempotent(rows(("A-1", "A"), ("A-2", "A")), dir, delta = false)
+    }
+    assert(snapshot() == before, "game B's data file must not be rewritten")
+  }
+
+  test("a delta publish over an unreadable partition fails instead of re-appending") {
+    val (dir, snapshot) = corruptedTable()
+    val before = snapshot()
+    intercept[Exception] {
+      val in = Publish.deltaOnly(rows(("A-1", "A"), ("C-1", "C")),
+        delta = true, dir, Seq("GAME_ID"))
+      Publish.idempotent(in, dir, delta = true)
+    }
+    assert(snapshot() == before, "nothing may be appended beside an unreadable table")
   }
 
   test("scope: game-id XOR season, stamped or derived season columns") {

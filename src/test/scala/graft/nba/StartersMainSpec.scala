@@ -1,7 +1,6 @@
 package graft.nba
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The starters ETL entry point end-to-end: strict invariant, idempotent

@@ -1,6 +1,5 @@
 package graft.nba
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Upsert emulation semantics (database/db_client.py:69-92). */

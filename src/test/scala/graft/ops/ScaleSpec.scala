@@ -1,62 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sources.Warehouse
 
-/** Scale tooling: salting preserves exact semantics; bucketing removes the
-  * join exchange. */
+/** Scale tooling: bucketing removes the join exchange. */
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
-
-  test("saltedJoin returns exactly the plain join's rows, including multiplicity") {
-    // skewed: 90% of big rows share key 1
-    val big = ((1 to 900).map(_ => 1L) ++ (1 to 100).map(_.toLong + 1))
-      .zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "payload")
-    val small = (1L to 101L).map(k => (k, s"dim$k")).toDF("k", "name")
-    val plain = big.join(small, Seq("k")).groupBy(col("k")).count()
-      .as[(Long, Long)].collect().toMap
-    val salted = Salting.saltedJoin(big, small, Seq("k"), n = 8)
-      .groupBy(col("k")).count().as[(Long, Long)].collect().toMap
-    assert(salted == plain)
-    assert(salted(1L) == 900L)
-  }
-
-  test("saltedJoin left_anti equals the plain anti-join") {
-    val big = ((1 to 50).map(_ => 1L) ++ Seq(2L, 3L, 4L))
-      .zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "payload")
-    val small = Seq((1L, "a"), (3L, "b")).toDF("k", "name")
-    val plain = big.join(small, Seq("k"), "left_anti")
-      .as[(Long, Long)].collect().toSet
-    val salted = Salting.saltedJoin(big, small, Seq("k"), n = 8, joinType = "left_anti")
-      .as[(Long, Long)].collect().toSet
-    assert(salted == plain)
-    assert(plain.map(_._1) == Set(2L, 4L))
-  }
-
-  test("saltedJoin rejects right/full-outer join types (replicas would multiply unmatched rows)") {
-    val big = Seq((1L, 1L)).toDF("k", "payload")
-    val small = Seq((1L, "a")).toDF("k", "name")
-    for (jt <- Seq("right", "right_outer", "full", "full_outer", "outer")) {
-      val e = intercept[IllegalArgumentException] {
-        Salting.saltedJoin(big, small, Seq("k"), n = 4, joinType = jt)
-      }
-      assert(e.getMessage.contains("left-flavored"), jt)
-    }
-  }
-
-  test("saltedAgg equals the direct aggregation for decomposable aggregates") {
-    val df = ((1 to 900).map(_ => (1L, 2.0)) ++ (1 to 100).map(i => (i.toLong + 1, i.toDouble)))
-      .toDF("k", "v")
-    val direct = df.groupBy(col("k"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-      .as[(Long, Double, Long)].collect().toSet
-    val salted = Salting.saltedAgg(df, Seq("k"), n = 8,
-        partialAggs = Seq(sum(col("v")).as("ps"), count(lit(1)).as("pc")),
-        finalAggs = Seq(sum(col("ps")).as("s"), sum(col("pc")).as("c")))
-      .as[(Long, Double, Long)].collect().toSet
-    assert(salted == direct)
-  }
 
   test("bucketed tables join with no exchange (co-located join)") {
     val a = (1L to 1000L).map(k => (k, k * 2)).toDF("k", "va")

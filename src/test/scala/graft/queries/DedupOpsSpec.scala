@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 
 /** The q33 `dfMax` posting-list cap: the O(Σ df²) self-join cost lever.
@@ -369,5 +370,40 @@ class DedupOpsSpec extends SparkSpec {
       .select(col("n_total_a"), col("n_total_b")).as[(Long, Long)].collect()
     assert(row.toSeq == Seq((5L, 5L)),
       s"published split labels are the denominator authority: ${row.toSeq}")
+  }
+
+  test("nearDupAgainst gates a stream against a static corpus: stateless, == batch") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.queries.DedupOps
+    val corpus = Seq(
+      (0L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six seven")).toDF("doc_id", "text")
+    val incoming = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"), // exact dup of 0
+      (3L, "totally unrelated words in this row"), // no collision survives verify
+      (5L, "one two three four five six seven"))   // exact dup of 2
+    val in = MemoryStream[(Long, String)]
+    val out = DedupOps.nearDupAgainst(in.toDF().toDF("doc_id", "text"), corpus)
+    val q = out.writeStream.format("memory").queryName("gate")
+      .outputMode("append").start()
+    try {
+      in.addData(incoming.take(2): _*)
+      q.processAllAvailable()
+      in.addData(incoming.drop(2): _*)
+      q.processAllAvailable()
+      // stateless by construction: per-row signatures + stream-static
+      // joins only — append mode with NO state operators and no watermark
+      assert(q.lastProgress.stateOperators.isEmpty,
+        "the gate must not hold streaming state")
+      val got = spark.sql("SELECT doc_id, corpus_id, jaccard FROM gate")
+        .as[(Long, Long, Double)].collect().toSeq
+      // canonical-band emission: identical docs collide in ALL bands but
+      // emit exactly once
+      assert(got.length == got.distinct.length, "duplicate emission")
+      val batch = DedupOps.nearDupAgainst(incoming.toDF("doc_id", "text"), corpus)
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(got.toSet == batch.toSet, "stream and batch semantics must agree")
+      assert(got.map(t => (t._1, t._2)).toSet == Set((1L, 0L), (5L, 2L)))
+    } finally q.stop()
   }
 }

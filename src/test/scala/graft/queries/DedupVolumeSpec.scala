@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** components() at the shapes that maximize round count: a 32-hop chain and
   * a 64-leaf star (16x the unit-spec graphs). Pins the cost model the

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 
 /** The text-analysis operators beyond their oracle coverage: hand-computed
@@ -839,5 +840,35 @@ class TextOpsSpec extends SparkSpec {
       assert(!plan.contains("CartesianProduct")
         && !plan.contains("BroadcastNestedLoop"), plan)
     }
+  }
+
+  test("the curation gates (mixFilter + hashSplit) run statelessly on a stream, == batch") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.queries.TextOps
+    val rows = (0L until 64L).map(i => (i, s"src${i % 2}", s"text $i"))
+    val in = MemoryStream[(Long, String, String)]
+    // the crawl-ingest composition: mix the arriving batch, then stamp its
+    // deterministic split — both pure row functions, so they lift to a
+    // stream unchanged (no watermark, no state)
+    val mixed = TextOps.mixFilter(
+      in.toDF().toDF("doc_id", "source", "text"), Seq("src0" -> "7f"), "33")
+    val out = TextOps.hashSplit(mixed)
+    val q = out.writeStream.format("memory").queryName("curation")
+      .outputMode("append").start()
+    try {
+      in.addData(rows.take(32): _*)
+      q.processAllAvailable()
+      in.addData(rows.drop(32): _*)
+      q.processAllAvailable()
+      assert(q.lastProgress.stateOperators.isEmpty,
+        "curation gates must not hold streaming state")
+      val got = spark.sql("SELECT doc_id, split FROM curation")
+        .as[(Long, String)].collect().toSet
+      val batchDocs = rows.toDF("doc_id", "source", "text")
+      val batch = TextOps.hashSplit(
+          TextOps.mixFilter(batchDocs, Seq("src0" -> "7f"), "33"))
+        .select("doc_id", "split").as[(Long, String)].collect().toSet
+      assert(got == batch, "stream and batch curation must agree")
+    } finally q.stop()
   }
 }

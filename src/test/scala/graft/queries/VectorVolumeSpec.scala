@@ -15,7 +15,6 @@ import graft.ops.VectorSim
   *     what banding must find).
   */
 class VectorVolumeSpec extends SparkSpec {
-  import spark.implicits._
 
   private val Threshold = 0.4
   private val Replicas = 16
