@@ -152,7 +152,8 @@ object IncrementalAgg {
     * returned frame and stay pinned until released. A one-shot caller
     * can ignore this (session teardown frees them); a caller refreshing
     * in a loop must release after consuming each result —
-    * `graft.ops.Checkpoints.rddsOf(result).foreach(_.unpersist(false))`. */
+    * `graft.ops.Checkpoints.rddsOf(result).foreach(_.unpersist(false))`
+    * — exactly what [[maintainExtremaBatch]] does per trigger. */
   def maintainExtrema(mv: DataFrame, cdc: DataFrame, base: DataFrame,
       keyCols: Seq[String], valueCol: String = "v",
       countCol: String = "n_rows", sumCol: String = "sum_value",
@@ -189,7 +190,7 @@ object IncrementalAgg {
     // refresh at MV scale (the r11 advisory). LAZY (eager = false) so
     // building the plan stays side-effect-free (explain costs nothing);
     // the blocks pin at the first action — see the scaladoc's release
-    // contract.
+    // contract ([[maintainExtremaBatch]] honors it per trigger).
     val merged = mv.join(delta, keyCols, "full_outer")
       .select(keyCols.map(col) ++ Seq(
         (coalesce(col(countCol), lit(0L)) + coalesce(col("_d_count"), lit(0L)))
@@ -434,9 +435,9 @@ object IncrementalAgg {
     // both the anti and semi joins, and without materialization each
     // reference re-evaluates the MV-sized semi probe — one extra full MV
     // scan per refresh (the exact repeated-evaluation cost the r11
-    // advisory fixed in maintainExtrema). A caller refreshing in a loop
-    // releases them through `Checkpoints.rddsOf` on the result; one-shot
-    // callers can leave them to session teardown.
+    // advisory fixed in maintainExtrema). Blocks are released per
+    // trigger by foldExactlyOnce's rddsOf sweep (maintainTopKBatch);
+    // one-shot callers can leave them to session teardown.
     val atRisk = mv.join(touched, keyAndId, "left_semi")
       .select(keyCols.map(col): _*).distinct()
       .localCheckpoint(false)
@@ -552,4 +553,212 @@ object IncrementalAgg {
       .select(keyCols.map(col) ++ Seq(col(minIdCol), col(minCol),
         col(maxIdCol), col(maxCol)): _*)
   }
+
+  private val AppliedMarker = "_applied_batch"
+
+  /** The shared exactly-once fold harness behind all four `foreachBatch`
+    * maintainers: recover the target dir, read the `_applied_batch`
+    * marker (an underscore file — invisible to parquet readers, and
+    * swapped atomically WITH the data it describes), SKIP a replayed
+    * micro-batch id, apply `next` to the current table (or `bootstrap`
+    * on first trigger), and publish result + new marker through the
+    * crash-safe directory swap. One definition, so a protocol fix
+    * (marker encoding, recover ordering, swap rules) cannot land in one
+    * fold and miss the others. A crash between the maintain and the
+    * swap leaves the old table + old marker — the replay re-applies
+    * cleanly. Any localCheckpoint blocks the maintained frame pinned are
+    * released after the publish (no-op for the checkpoint-free folds).
+    *
+    * Bootstrap semantics: `bootstrap` is the EMPTY view, which is
+    * correct when the CDC stream replays the base's history from its
+    * beginning (or base and stream start together). A deployment whose
+    * base PREDATES the stream seeds the target dir with a base-derived
+    * view before the first trigger — an existing dir is picked up as
+    * the current table (the `fs.exists` branch), marker or no marker,
+    * so seeding needs no special protocol.
+    *
+    * Emptied-dir rule: a complete erasure ([[graft.sources.Warehouse
+    * .deleteWhere]] over the whole view — tenant offboarding, a GDPR
+    * sweep across the derived estates) drops every DATA file but leaves
+    * the `_SUCCESS` and `_applied_batch` markers (underscore-invisible
+    * to its visible-files walk), so the dir EXISTS with zero readable
+    * files. That is a valid EMPTY view — real published history emptied,
+    * GateState's emptied-batch rule — so the next trigger folds against
+    * `bootstrap` instead of dying on zero-file schema inference, while
+    * the surviving marker still gates replay (found by
+    * IncrementalVolumeSpec's emptied-estate stage, the same hazard
+    * family GateVolumeSpec caught in `GateState.resume`). */
+  private def foldExactlyOnce(spark: org.apache.spark.sql.SparkSession,
+      dir: String, batchId: Long)(bootstrap: => DataFrame)(
+      next: DataFrame => DataFrame): Unit = {
+    graft.sources.Warehouse.recover(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(p, AppliedMarker)
+    val applied: Long =
+      if (!fs.exists(marker)) -1L
+      else {
+        val in = fs.open(marker)
+        try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
+      }
+    if (batchId <= applied) return // replayed micro-batch: already folded
+    // exists-but-no-visible-data = erasure-emptied view (see the
+    // emptied-dir rule above): fold as empty, never schema-infer
+    val cur =
+      if (fs.exists(p) && graft.sources.Warehouse.dirHasVisibleData(fs, p))
+        spark.read.parquet(dir)
+      else bootstrap
+    val out = next(cur)
+    try graft.sources.Warehouse.replaceDirWith(spark, dir) { staging =>
+      out.write.parquet(staging)
+      val w = fs.create(
+        new org.apache.hadoop.fs.Path(staging, AppliedMarker), true)
+      try w.write(batchId.toString.getBytes("UTF-8")) finally w.close()
+    } finally {
+      graft.ops.Checkpoints.rddsOf(out).foreach(_.unpersist(false))
+    }
+  }
+
+  /** The per-trigger base read shared by the folds that consult the
+    * post-delta fact table ([[maintainExtremaBatch]],
+    * [[maintainTopKBatch]], [[maintainExtremaEnforcedBatch]]). Same
+    * emptied-dir rule as [[foldExactlyOnce]]'s view read: a base dir
+    * that EXISTS but holds zero visible data files is an
+    * erasure-emptied table — the post-delta state really is "no rows"
+    * (the erasure arrives as this very batch's CDC deletes), so the
+    * at-risk recompute consults `empty`, a zero-row frame typed from
+    * the batch's own columns (the CDC old/new values carry the value
+    * domain), instead of dying on schema inference (found by
+    * IncrementalVolumeSpec's emptied-base stage). A MISSING dir stays
+    * a loud failure: the fold was wired ahead of the base table's own
+    * writer, the wiring error the batch folds' scaladocs forbid —
+    * folding it as empty would silently diverge every at-risk key. */
+  private def baseOrEmpty(spark: org.apache.spark.sql.SparkSession,
+      baseDir: String)(empty: => DataFrame): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(baseDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && !graft.sources.Warehouse.dirHasVisibleData(fs, p)) empty
+    else spark.read.parquet(baseDir)
+  }
+
+  /** Continuous aggregation: the `foreachBatch` fold that maintains an
+    * at-rest MV parquet from a CDC micro-batch stream — wire it as
+    * `cdcStream.writeStream.foreachBatch(IncrementalAgg.maintainAggBatch(
+    * mvDir, keys))`. Each micro-batch applies [[maintain]] against the
+    * current MV under [[foldExactlyOnce]]'s marker/replay-skip/swap
+    * discipline (the same batch-dir-swap exactly-once as
+    * CorpusStreamMain).
+    *
+    * Scale: per trigger this costs O(|batch| + |MV|) — the continuous
+    * form of the same asymptotics, with the MV read fresh from disk each
+    * batch (nothing MV-sized held in executor memory between triggers). */
+  def maintainAggBatch(mvDir: String, keyCols: Seq[String],
+      countCol: String = "n_rows", sumCol: String = "sum_value")(
+      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batchId: Long): Unit =
+    foldExactlyOnce(batch.sparkSession, mvDir, batchId)(
+      batch.select(keyCols.map(col): _*).limit(0)
+        .withColumn(countCol, lit(0L))
+        .withColumn(sumCol, lit(0).cast("decimal(38,4)")))(mv =>
+      maintain(mv, batch.toDF(), keyCols, countCol, sumCol)
+        .withColumn(sumCol, col(sumCol).cast("decimal(38,4)")))
+
+  /** [[maintainAggBatch]] for the distinct-count view: the `foreachBatch`
+    * fold that maintains the at-rest (key, value) -> multiplicity SUPPORT
+    * table via [[maintainDistinctSupport]]. The support table IS the
+    * published artifact — the distinct-count MV derives from it on read
+    * ([[distinctCounts]] over the parquet, O(|support|)); publishing both
+    * under one marker would need a two-directory atomic swap the
+    * protocol deliberately does not promise. Per trigger this costs
+    * O(|batch| + |support|). */
+  def maintainDistinctBatch(supportDir: String, keyCols: Seq[String],
+      valueCol: String = "v", multCol: String = "n_rows")(
+      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batchId: Long): Unit =
+    foldExactlyOnce(batch.sparkSession, supportDir, batchId)(
+      batch.select(keyCols.map(col) :+ col("new_value").as(valueCol): _*)
+        .limit(0)
+        .withColumn(multCol, lit(0L)))(support =>
+      maintainDistinctSupport(support, batch.toDF(), keyCols, valueCol, multCol))
+
+  /** [[maintainAggBatch]] for the extrema view: the `foreachBatch` fold
+    * that maintains an at-rest (count, sum, min, max) MV via
+    * [[maintainExtrema]]. `baseDir` is the POST-delta fact table read
+    * fresh each trigger for the at-risk extrema recompute — in a CDC
+    * topology the feed is emitted by the base table's own writer, so by
+    * the time a batch's CDC rows arrive the base already reflects them;
+    * wire this fold downstream of that writer, never ahead of it.
+    * [[foldExactlyOnce]] also releases maintainExtrema's checkpointed
+    * merge after each publish — the per-trigger half of its block-release
+    * contract. */
+  /** [[maintainAggBatch]] for the top-k view: the `foreachBatch` fold
+    * that maintains an at-rest exploded top-k MV via [[maintainTopK]].
+    * Same post-delta `baseDir` contract as [[maintainExtremaBatch]] —
+    * wire it downstream of the base table's own writer, never ahead of
+    * it. Per trigger: O(|batch| + |MV|) plus the at-risk keys' base
+    * aggregation. */
+  def maintainTopKBatch(mvDir: String, baseDir: String, keyCols: Seq[String],
+      k: Int, idCol: String = "id", valueCol: String = "v")(
+      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batchId: Long): Unit =
+    foldExactlyOnce(batch.sparkSession, mvDir, batchId)(
+      batch.select((keyCols :+ idCol).map(col): _*).limit(0)
+        .withColumn(valueCol, lit(null).cast("double")))(mv =>
+      maintainTopK(mv, batch.toDF(),
+        baseOrEmpty(batch.sparkSession, baseDir)(
+          batch.select(keyCols.map(col) ++ Seq(col(idCol),
+            col("old_value").as(valueCol)): _*).limit(0)),
+        keyCols, k, idCol, valueCol))
+
+  def maintainExtremaBatch(mvDir: String, baseDir: String, keyCols: Seq[String],
+      valueCol: String = "v", countCol: String = "n_rows",
+      sumCol: String = "sum_value", minCol: String = "min_value",
+      maxCol: String = "max_value")(
+      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batchId: Long): Unit =
+    foldExactlyOnce(batch.sparkSession, mvDir, batchId)(
+      batch.select(keyCols.map(col): _*).limit(0)
+        .withColumn(countCol, lit(0L))
+        .withColumn(sumCol, lit(0).cast("decimal(38,4)"))
+        .withColumn(minCol, lit(null).cast("decimal(18,4)"))
+        .withColumn(maxCol, lit(null).cast("decimal(18,4)")))(mv =>
+      maintainExtrema(mv, batch.toDF(),
+          baseOrEmpty(batch.sparkSession, baseDir)(
+            batch.select(keyCols.map(col) :+
+              col("old_value").as(valueCol): _*).limit(0)),
+          keyCols, valueCol, countCol, sumCol, minCol, maxCol)
+        .withColumn(sumCol, col(sumCol).cast("decimal(38,4)")))
+
+  /** [[maintainAggBatch]] for the ENFORCED extrema view: the
+    * `foreachBatch` fold that maintains an at-rest argmin/argmax MV via
+    * [[maintainExtremaEnforced]] — the continuous form every other view
+    * class already carries (agg/extrema/distinct/top-k), so the enforced
+    * variant is a first-class serving choice rather than a one-shot
+    * call. Same post-delta `baseDir` contract as
+    * [[maintainExtremaBatch]] — wire it downstream of the base table's
+    * own writer, never ahead of it — and the same exactly-once
+    * marker/replay-skip/swap discipline from [[foldExactlyOnce]],
+    * including the per-trigger release of maintainTopK's checkpointed
+    * at-risk probes (one per direction). The bootstrap MV is empty with
+    * the id columns typed from the batch's own `idCol` and the bound
+    * columns DOUBLE (graft_topk's buffer type — the fold-stable shape
+    * maintainExtremaEnforced both consumes and emits). Per trigger:
+    * O(|batch| + |MV|) twice (one top-1 fold per direction) plus the
+    * at-risk keys' base aggregations. */
+  def maintainExtremaEnforcedBatch(mvDir: String, baseDir: String,
+      keyCols: Seq[String], idCol: String = "id", valueCol: String = "v",
+      minCol: String = "min_value", maxCol: String = "max_value",
+      minIdCol: String = "min_id", maxIdCol: String = "max_id")(
+      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batchId: Long): Unit =
+    foldExactlyOnce(batch.sparkSession, mvDir, batchId)(
+      batch.select(keyCols.map(col) :+ col(idCol).as(minIdCol): _*).limit(0)
+        .withColumn(minCol, lit(null).cast("double"))
+        .withColumn(maxIdCol, col(minIdCol))
+        .withColumn(maxCol, lit(null).cast("double")))(mv =>
+      maintainExtremaEnforced(mv, batch.toDF(),
+        baseOrEmpty(batch.sparkSession, baseDir)(
+          batch.select(keyCols.map(col) ++ Seq(col(idCol),
+            col("old_value").as(valueCol)): _*).limit(0)),
+        keyCols, idCol, valueCol, minCol, maxCol, minIdCol, maxIdCol))
 }

@@ -180,6 +180,94 @@ class IncrementalAggSpec extends SparkSpec {
       s"base must be filtered by exactly one at-risk semi join: $plan")
   }
 
+  test("maintainAggBatch folds a CDC stream into an at-rest MV, exactly-once on replay") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val mvDir = java.nio.file.Files.createTempDirectory("mv").toString + "/mv"
+    val in = MemoryStream[(String, Long, Option[String], Option[String])]
+    val cdcStream = in.toDF().toDF("op", "k", "o", "n").select(col("op"), col("k"),
+      col("o").cast("decimal(18,4)").as("old_value"),
+      col("n").cast("decimal(18,4)").as("new_value"))
+    val q = cdcStream.writeStream
+      .foreachBatch(IncrementalAgg.maintainAggBatch(mvDir, Seq("k")) _)
+      .start()
+    try {
+      in.addData(("insert", 1L, None, Some("2.5")), ("insert", 2L, None, Some("4")))
+      q.processAllAvailable()
+      in.addData(("insert", 1L, None, Some("1.5")),
+        ("update", 2L, Some("4"), Some("6")),
+        ("insert", 3L, None, Some("9")))
+      q.processAllAvailable()
+      in.addData(("delete", 3L, Some("9"), None))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = collectMv(spark.read.parquet(mvDir)
+      .select(col("k"), col("n_rows"), col("sum_value").cast("decimal(18,4)")))
+    assert(got == Map(1L -> ((2L, dec("4"))), 2L -> ((1L, dec("6")))))
+    // a replayed micro-batch id must be a no-op (restart redelivery)
+    val replay = cdc(("insert", 1L, None, Some("100")))
+    IncrementalAgg.maintainAggBatch(mvDir, Seq("k"))(replay, 0L)
+    val after = collectMv(spark.read.parquet(mvDir)
+      .select(col("k"), col("n_rows"), col("sum_value").cast("decimal(18,4)")))
+    assert(after == got, "batch id 0 was already applied: replay must not double-fold")
+    // a genuinely NEW batch id applies
+    IncrementalAgg.maintainAggBatch(mvDir, Seq("k"))(replay, 99L)
+    val next = collectMv(spark.read.parquet(mvDir)
+      .select(col("k"), col("n_rows"), col("sum_value").cast("decimal(18,4)")))
+    assert(next(1L) == ((3L, dec("104"))))
+  }
+
+  test("maintainExtremaBatch folds a CDC stream into an extrema MV, exactly-once on replay") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val root = java.nio.file.Files.createTempDirectory("mvext").toString
+    val mvDir = root + "/mv"
+    val baseDir = root + "/base"
+    // the base table is maintained by its own writer; here the test plays
+    // that role, landing each batch's post-state BEFORE the fold runs
+    def landBase(rows: (Long, String)*): Unit =
+      facts(rows: _*).write.mode("overwrite").parquet(baseDir)
+    val in = MemoryStream[(String, Long, Option[String], Option[String])]
+    val cdcStream = in.toDF().toDF("op", "k", "o", "n").select(col("op"), col("k"),
+      col("o").cast("decimal(18,4)").as("old_value"),
+      col("n").cast("decimal(18,4)").as("new_value"))
+    val q = cdcStream.writeStream
+      .foreachBatch(IncrementalAgg.maintainExtremaBatch(mvDir, baseDir, Seq("k")) _)
+      .start()
+    try {
+      landBase((1L, "2.5"), (2L, "4"))
+      in.addData(("insert", 1L, None, Some("2.5")), ("insert", 2L, None, Some("4")))
+      q.processAllAvailable()
+      landBase((1L, "2.5"), (1L, "1.5"), (2L, "6"), (3L, "9"))
+      in.addData(("insert", 1L, None, Some("1.5")),
+        ("update", 2L, Some("4"), Some("6")),
+        ("insert", 3L, None, Some("9")))
+      q.processAllAvailable()
+      // delete key 1's MIN: the at-risk recompute must consult base
+      landBase((1L, "2.5"), (2L, "6"), (3L, "9"))
+      in.addData(("delete", 1L, Some("1.5"), None))
+      q.processAllAvailable()
+    } finally q.stop()
+    def readMv() = collectExt(spark.read.parquet(mvDir)
+      .select(col("k"), col("n_rows"), col("sum_value").cast("decimal(18,4)"),
+        col("min_value"), col("max_value")))
+    val got = readMv()
+    assert(got == Map(
+      1L -> ((1L, dec("2.5"), dec("2.5"), dec("2.5"))),
+      2L -> ((1L, dec("6"), dec("6"), dec("6"))),
+      3L -> ((1L, dec("9"), dec("9"), dec("9")))), got.toString)
+    // a replayed micro-batch id must be a no-op (restart redelivery)
+    IncrementalAgg.maintainExtremaBatch(mvDir, baseDir, Seq("k"))(
+      cdc(("insert", 1L, None, Some("100"))), 0L)
+    assert(readMv() == got, "batch id 0 was already applied: replay must not double-fold")
+    // a genuinely NEW batch id applies and tightens the max incrementally
+    landBase((1L, "2.5"), (1L, "100"), (2L, "6"), (3L, "9"))
+    IncrementalAgg.maintainExtremaBatch(mvDir, baseDir, Seq("k"))(
+      cdc(("insert", 1L, None, Some("100"))), 99L)
+    val next = readMv()
+    assert(next(1L) == ((2L, dec("102.5"), dec("2.5"), dec("100"))), next.toString)
+  }
+
   test("the delta aggregates before the merge join — the MV side is never re-aggregated") {
     val mv = mvOf(facts((1L, "1"), (2L, "2")))
     val plan = IncrementalAgg.maintain(mv, cdc(("insert", 1L, None, Some("3"))), Seq("k"))
@@ -256,6 +344,39 @@ class IncrementalAggSpec extends SparkSpec {
     val want = collectDistinct(sfacts(bag.toSeq: _*).groupBy("k")
       .agg(countDistinct(col("v")).as("n_distinct"), count(lit(1)).as("n_rows")))
     assert(got == want, "support-table maintenance must equal full recompute")
+  }
+
+  test("maintainDistinctBatch folds a CDC stream into an at-rest support table, exactly-once on replay") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val supDir = java.nio.file.Files.createTempDirectory("sup").toString + "/support"
+    val in = MemoryStream[(String, Long, Option[String], Option[String])]
+    val cdcStream = in.toDF().toDF("op", "k", "old_value", "new_value")
+    val q = cdcStream.writeStream
+      .foreachBatch(IncrementalAgg.maintainDistinctBatch(supDir, Seq("k")) _)
+      .start()
+    try {
+      in.addData(("insert", 1L, None, Some("a")), ("insert", 1L, None, Some("a")),
+        ("insert", 1L, None, Some("b")))
+      q.processAllAvailable()
+      // one of the two 'a's departs (distinct count survives via
+      // multiplicity), 'b' re-values to 'c'
+      in.addData(("delete", 1L, Some("a"), None),
+        ("update", 1L, Some("b"), Some("c")))
+      q.processAllAvailable()
+    } finally q.stop()
+    def readCounts() = collectDistinct(IncrementalAgg.distinctCounts(
+      spark.read.parquet(supDir), Seq("k")))
+    val got = readCounts()
+    assert(got == Map(1L -> ((2L, 2L))), got.toString)
+    // a replayed micro-batch id must be a no-op (restart redelivery)
+    IncrementalAgg.maintainDistinctBatch(supDir, Seq("k"))(
+      scdc(("insert", 1L, None, Some("z"))), 0L)
+    assert(readCounts() == got, "batch id 0 was already applied: replay must not double-fold")
+    // a genuinely NEW batch id applies
+    IncrementalAgg.maintainDistinctBatch(supDir, Seq("k"))(
+      scdc(("insert", 1L, None, Some("z"))), 99L)
+    assert(readCounts()(1L) == ((3L, 3L)))
   }
 
   test("maintainDistinctSupport: unknown op is loud; phantom delete stays visible") {
@@ -625,17 +746,61 @@ class IncrementalAggSpec extends SparkSpec {
       s"the direction merge must stay full-outer: $plan")
   }
 
-  test("maintainTopK: a randomized multi-refresh CDC story lands on the final-state top-k") {
+  test("maintainExtremaEnforcedBatch folds a CDC stream into an at-rest MV, exactly-once on replay") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val root = java.nio.file.Files.createTempDirectory("mvenf").toString
+    val mvDir = root + "/mv"
+    val baseDir = root + "/base"
+    def landBase(rows: (Long, Long, String)*): Unit =
+      tfacts(rows: _*).write.mode("overwrite").parquet(baseDir)
+    val in = MemoryStream[(String, Long, Long, Option[String], Option[String])]
+    val cdcStream = in.toDF().toDF("op", "k", "id", "o", "n")
+      .select(col("op"), col("k"), col("id"),
+        col("o").cast("decimal(18,4)").as("old_value"),
+        col("n").cast("decimal(18,4)").as("new_value"))
+    val q = cdcStream.writeStream
+      .foreachBatch(
+        IncrementalAgg.maintainExtremaEnforcedBatch(mvDir, baseDir, Seq("k")) _)
+      .start()
+    try {
+      landBase((1L, 10L, "10"), (1L, 20L, "2"), (1L, 30L, "5"))
+      in.addData(("insert", 1L, 10L, None, Some("10")),
+        ("insert", 1L, 20L, None, Some("2")),
+        ("insert", 1L, 30L, None, Some("5")))
+      q.processAllAvailable()
+      // delete the argmax 10: the refill (30 -> 5.0) lives only in base;
+      // the min bound (20 -> 2.0) is untouched by the departure
+      landBase((1L, 20L, "2"), (1L, 30L, "5"))
+      in.addData(("delete", 1L, 10L, Some("10"), None))
+      q.processAllAvailable()
+    } finally q.stop()
+    def readMv() = collectEnf(spark.read.parquet(mvDir)
+      .select(col("k"), col("min_id"), col("min_value"),
+        col("max_id"), col("max_value")))
+    val got = readMv()
+    assert(got == Map(1L -> ((20L, 2.0, 30L, 5.0))), got.toString)
+    // a replayed micro-batch id must be a no-op (restart redelivery)
+    IncrementalAgg.maintainExtremaEnforcedBatch(mvDir, baseDir, Seq("k"))(
+      tcdc(("insert", 1L, 40L, None, Some("100"))), 0L)
+    assert(readMv() == got, "batch id 0 was already applied: replay must not double-fold")
+    // a genuinely NEW batch id applies through the arrival algebra
+    landBase((1L, 20L, "2"), (1L, 30L, "5"), (1L, 40L, "100"))
+    IncrementalAgg.maintainExtremaEnforcedBatch(mvDir, baseDir, Seq("k"))(
+      tcdc(("insert", 1L, 40L, None, Some("100"))), 99L)
+    assert(readMv() == Map(1L -> ((20L, 2.0, 40L, 100.0))))
+  }
+
+  test("maintainTopKBatch: a randomized multi-trigger CDC story lands on the final-state top-k") {
     // eight random batches (inserts of fresh ids, deletes/updates of live
     // rows — one event per row per batch, the feed contract), base landed
-    // before each refresh; the at-rest MV after the last refresh must
-    // equal a direct top-k of the final base — pinning the
-    // arrival-algebra / at-risk-recompute interplay across many
-    // refreshes, not just one
+    // before each trigger (downstream-of-the-base-writer wiring); the
+    // at-rest MV after the last fold must equal a direct top-k of the
+    // final base — pinning the arrival-algebra / at-risk-recompute
+    // interplay across many triggers, not just one
     val rnd = new scala.util.Random(115)
     val root = java.nio.file.Files.createTempDirectory("mvtopk_rand").toString
-    val baseDir = root + "/base"
-    var mv = topOf(tfacts(), 2)
+    val (mvDir, baseDir) = (root + "/mv", root + "/base")
     var live = Map.empty[(Long, Long), String]
     var nextId = 1000L
     for (b <- 0 until 8) {
@@ -657,16 +822,54 @@ class IncrementalAggSpec extends SparkSpec {
         ins.map { case (k, id, v) => (k, id) -> v }
       tfacts(live.toSeq.map { case ((k, id), v) => (k, id, v) }: _*)
         .write.mode("overwrite").parquet(baseDir)
-      // each refresh is published and read back, as an at-rest MV is
-      val mvDir = s"$root/mv$b"
-      IncrementalAgg.maintainTopK(mv, tcdc(events: _*),
-        spark.read.parquet(baseDir), Seq("k"), k = 2).write.parquet(mvDir)
-      mv = spark.read.parquet(mvDir)
+      IncrementalAgg.maintainTopKBatch(mvDir, baseDir, Seq("k"), k = 2)(
+        tcdc(events: _*), b.toLong)
     }
-    val got = collectTop(mv)
+    val got = collectTop(spark.read.parquet(mvDir))
     val want = collectTop(topOf(
       tfacts(live.toSeq.map { case ((k, id), v) => (k, id, v) }: _*), 2))
     assert(got == want, s"multi-trigger fold diverged: got $got want $want")
   }
 
+  test("maintainTopKBatch folds a CDC stream into an at-rest top-k MV, exactly-once on replay") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val root = java.nio.file.Files.createTempDirectory("mvtopk").toString
+    val mvDir = root + "/mv"
+    val baseDir = root + "/base"
+    def landBase(rows: (Long, Long, String)*): Unit =
+      tfacts(rows: _*).write.mode("overwrite").parquet(baseDir)
+    val in = MemoryStream[(String, Long, Long, Option[String], Option[String])]
+    val cdcStream = in.toDF().toDF("op", "k", "id", "o", "n")
+      .select(col("op"), col("k"), col("id"),
+        col("o").cast("decimal(18,4)").as("old_value"),
+        col("n").cast("decimal(18,4)").as("new_value"))
+    val q = cdcStream.writeStream
+      .foreachBatch(
+        IncrementalAgg.maintainTopKBatch(mvDir, baseDir, Seq("k"), k = 2) _)
+      .start()
+    try {
+      landBase((1L, 10L, "10"), (1L, 20L, "8"), (1L, 30L, "5"))
+      in.addData(("insert", 1L, 10L, None, Some("10")),
+        ("insert", 1L, 20L, None, Some("8")),
+        ("insert", 1L, 30L, None, Some("5")))
+      q.processAllAvailable()
+      // delete the kept 20: the refill (30) lives only in base
+      landBase((1L, 10L, "10"), (1L, 30L, "5"))
+      in.addData(("delete", 1L, 20L, Some("8"), None))
+      q.processAllAvailable()
+    } finally q.stop()
+    def readMv() = collectTop(spark.read.parquet(mvDir))
+    val got = readMv()
+    assert(got == Map(1L -> Set((10L, 10.0), (30L, 5.0))), got.toString)
+    // a replayed micro-batch id must be a no-op (restart redelivery)
+    IncrementalAgg.maintainTopKBatch(mvDir, baseDir, Seq("k"), k = 2)(
+      tcdc(("insert", 1L, 40L, None, Some("100"))), 0L)
+    assert(readMv() == got, "batch id 0 was already applied: replay must not double-fold")
+    // a genuinely NEW batch id applies through the arrival algebra
+    landBase((1L, 10L, "10"), (1L, 30L, "5"), (1L, 40L, "100"))
+    IncrementalAgg.maintainTopKBatch(mvDir, baseDir, Seq("k"), k = 2)(
+      tcdc(("insert", 1L, 40L, None, Some("100"))), 99L)
+    assert(readMv() == Map(1L -> Set((40L, 100.0), (10L, 10.0))))
+  }
 }
